@@ -60,11 +60,18 @@ object Bench {
     * had to chase the stale name. */
   private val Round = "r19"
 
-  /** The ONE bench/plan-dump session recipe: master + shuffle partitions
-    * from $SPARK_GRAFT_CPUS, AQE with runtime SHJ conversion, SHJ
-    * preference (A/B'd in OPTIMIZATION_r19.md). PlanDump MUST build its
-    * session from the same recipe or the dumped join strategies diverge
-    * from what the bench executes (r18 shipped exactly that skew). */
+  /** The ONE session recipe — the library builds no session any other
+    * way: master + shuffle partitions from $SPARK_GRAFT_CPUS, AQE
+    * with runtime SHJ conversion, SHJ preference (A/B'd in
+    * OPTIMIZATION_r19.md), committer v2 without `_SUCCESS` markers.
+    * Bench, Verify, PlanDump, JobProfile, ScaleProfile, streaming.Demo,
+    * the perfbench harness and the test suite's shared session
+    * (`SparkSpec.session`) all build from it, so the oracle gate, the
+    * tests, the plan dumps and the scale profile see exactly the
+    * configuration the bench measures (r18 shipped a PlanDump whose
+    * join strategies diverged from the bench's). The one documented
+    * difference: PlanAudit turns AQE off on top, because AQE hides
+    * codegen markers and join strategies until execution. */
   def sessionBuilder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")

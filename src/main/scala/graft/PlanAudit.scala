@@ -518,11 +518,10 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // the bench's recipe with ONE difference: AQE off, so the static
+    // plans this audit reads show codegen markers and join strategies
+    // (AQE defers both to execution)
+    val spark = Bench.sessionBuilder("4")
       .config("spark.sql.adaptive.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -28,13 +28,7 @@ object ScaleProfile {
     // skill's invocation); driver memory comes from build.sbt's -Xmx —
     // setting spark.driver.memory after JVM start would be inert
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.sessionBuilder(cpus).appName("graft-scale-profile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     case class Row(name: String, p: Metrics.Profile, sec: Double)

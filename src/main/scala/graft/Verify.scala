@@ -64,12 +64,13 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     Bench.silenceBenignStreamingTermination()
     val sel = args.drop(2).toSet
-    // a typo'd name must not produce an empty-but-successful run that
-    // reads as "query passed adjudication"
+    // a typo'd name must not produce a successful run that reads as
+    // "query passed adjudication" — not even next to correct names
     val unknown = sel.diff(SparkEntry.queries.keySet)
     if (unknown.nonEmpty) {
       System.err.println(s"[verify] no such query: ${unknown.mkString(", ")}")
-      if (sel.forall(unknown.contains)) { spark.stop(); sys.exit(1) }
+      spark.stop()
+      sys.exit(1)
     }
     val qs = if (sel.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(sel).toMap

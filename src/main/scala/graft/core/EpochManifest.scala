@@ -4,13 +4,16 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Snapshot-isolated epoch store — the commit protocol the persisted
-  * IVF-PQ serving index reads through.
+/** Snapshot-isolated epoch store — the one commit protocol every
+  * epoch store shares: the persisted IVF-PQ serving index, the text and
+  * media band indexes, materialized-aggregate cubes and the streaming
+  * serving partials ([[graft.streaming.Jobs.dualSinkQuery]]).
   *
-  * The plain `epoch=N` dir layout ([[graft.streaming.Jobs.compactEpochStore]])
-  * cannot give a CONCURRENT reader isolation: its swap is
-  * delete-covered-dirs-then-rename-fold, so a searcher that opened the
-  * index just before a compaction reads files that vanish mid-scan.
+  * A plain `epoch=N` dir layout cannot give a CONCURRENT reader
+  * isolation: its compaction swap is delete-covered-dirs-then-rename-fold,
+  * so a searcher that opened the index just before a compaction reads
+  * files that vanish mid-scan, and a crash inside the swap needs a
+  * marker file to tell a finished fold from a half-written one.
   * A long-running serving index needs the property real table formats
   * (Iceberg, Delta) are built around: immutable data dirs + an atomic
   * manifest commit + garbage collection that lags live snapshots. This
@@ -805,20 +808,25 @@ object EpochManifest {
   /** Fold every committed entry with epoch < `uptoEpoch` into ONE new
     * data dir and swap it in with a single manifest commit, then gc —
     * the snapshot-isolated compaction every manifest store shares
-    * (IVF-PQ codes, text band/shingle, media signatures). Readers
-    * holding the pre-compaction manifest keep every dir they resolved
-    * ([[gc]]'s two-manifest lag); crash before the commit leaves an
-    * orphan fold dir for a later gc and the old manifest fully live. */
+    * (IVF-PQ codes, text band/shingle, media signatures, the streaming
+    * serving partials, materialized-aggregate cubes). `fold` turns the
+    * union of the covered rows into the fold dir's rows: row identity
+    * for the searched stores, a re-aggregation (which must keep
+    * `schema`) for the partial-aggregate stores. Readers holding the
+    * pre-compaction manifest keep every dir they resolved ([[gc]]'s
+    * two-manifest lag); crash before the commit leaves an orphan fold
+    * dir for a later gc and the old manifest fully live. */
   def compact(spark: SparkSession, root: String, schema: StructType,
               uptoEpoch: Long = Long.MaxValue,
-              partitionBy: Seq[String] = Nil, coalesceTo: Int = 8): Unit = {
+              partitionBy: Seq[String] = Nil, coalesceTo: Int = 8,
+              fold: DataFrame => DataFrame = identity): Unit = {
     val es = entries(spark, root)
     val covered = es.filter(_.epoch < uptoEpoch)
     if (covered.size <= 1) return // already compact — makes re-runs no-ops
     val maxCov = covered.map(_.epoch).max
-    val folded = covered
+    val folded = fold(covered
       .map(e => spark.read.schema(schema).parquet(s"$root/${e.dir}"))
-      .reduce(_ unionByName _)
+      .reduce(_ unionByName _))
       .coalesce(coalesceTo)
     val foldDir = newFoldDir(spark, root, maxCov)
     val w = folded.write.mode("overwrite")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable end-to-end streaming demo: lands a small JSONL batch as the
   * file-source "topic", runs clean → dual sink (raw + serving) with
   * checkpointing, then restarts the same query against the same
@@ -13,11 +11,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_stream_demo").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Bench.sessionBuilder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

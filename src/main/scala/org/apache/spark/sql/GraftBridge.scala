@@ -17,11 +17,21 @@ object GraftBridge {
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Per-session SQL function registration (idempotent): a name the
+    * session already has — from an earlier call or from
+    * [[graft.plans.GraftExtensions]] — is kept. Every graft name has
+    * exactly one builder, so a re-registration would only replace it
+    * with itself (and log a "replaced a previously registered
+    * function" warning per query). */
   def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo("graft.plans", name), builder)
+                       builder: Seq[Expression] => Expression): Unit = {
+    val reg = spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+    val id = FunctionIdentifier(name)
+    reg.synchronized {
+      if (!reg.functionExists(id))
+        reg.registerFunction(id, new ExpressionInfo("graft.plans", name), builder)
+    }
+  }
 
   /** Per-session planner-strategy registration (idempotent) — the
     * post-creation path for sessions built without

@@ -61,7 +61,8 @@ class EpochManifestSpec extends SparkSpec {
     val root = tmp()
     writeDir(root, "d0-1", 0 until 5)
     import spark.implicits._
-    // empty write: no data files, only _SUCCESS
+    // empty write: a committed dir with zero rows (and, under the bench
+    // recipe, no _SUCCESS marker either)
     Seq.empty[(Long, Long)].toDF("id", "part")
       .write.mode("overwrite").parquet(s"$root/d1-1")
     EpochManifest.commit(spark, root, Seq(Entry(0L, "d0-1"), Entry(1L, "d1-1")))

@@ -6,17 +6,16 @@ package graft
   * bucketed SMJ) must hold or `sbt test` fails — they can no longer rot
   * in a side runMain.
   *
-  * Runs in a child session of the shared test session: plan-audit config
-  * (AQE off so static plans show codegen markers and join strategies) is
-  * session-scoped runtime conf, so the other suites keep their defaults.
+  * Runs in a child session of the shared test session (the bench
+  * recipe) with PlanAudit.main's one difference, AQE off so static plans
+  * show codegen markers and join strategies — session-scoped runtime
+  * conf, so the other suites keep the recipe's AQE.
   */
 class PlanSpec extends SparkSpec {
 
   private lazy val audits: Seq[PlanAudit.Audit] = {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
     PlanAudit.run(s, sf001)
   }
 

@@ -16,13 +16,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's own recipe, so every test runs the join posture and
+    // committer settings the bench measures (SessionRecipeSpec guards this)
+    val s = Bench.sessionBuilder("4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

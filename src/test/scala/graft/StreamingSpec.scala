@@ -419,34 +419,63 @@ class StreamingSpec extends SparkSpec {
       Seq(("click", 2L, 4.5), ("view", 1L, 2.5)))
   }
 
-  test("compaction recovery: a crash between deletes and rename loses nothing") {
+  test("compaction crash safety: uncommitted fold unseen, pre-gc swap exact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_recover").toString
-    val serving = s"$dir/serving"
-    def writePartial(epoch: Int, typ: String, n: Long, total: Double): Unit =
-      Seq((typ, n, total)).toDF("event_type", "n", "total_dec")
-        .withColumn("total_dec", col("total_dec").cast(graft.queries.Parity.Dec))
-        .write.mode("overwrite").parquet(s"$serving.partials/epoch=$epoch")
-    writePartial(0, "click", 1L, 10.0)
-    writePartial(1, "click", 1L, 20.0)
-    writePartial(2, "view", 1L, 5.0)
-    // simulate a compaction of epochs {0,1} that crashed mid-swap: the
-    // complete fold is parked (with _SUCCESS), epoch=0 was deleted, but
-    // epoch=1 and the final rename never happened
-    spark.read.parquet(s"$serving.partials/epoch=0", s"$serving.partials/epoch=1")
-      .groupBy("event_type").agg(sum("n").as("n"), sum("total_dec").as("total_dec"))
-      .write.parquet(s"$serving.compact_tmp/upto=1")
-    val fs = new org.apache.hadoop.fs.Path(dir)
+    import graft.core.EpochManifest
+    val fs = new org.apache.hadoop.fs.Path("/")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$serving.partials/epoch=0"), true))
-    // the next compaction entry must recover (finish the swap) BEFORE
-    // folding — refolding the epoch=1 remnant would double-count it, and
-    // the old code deleted the parked fold, losing epoch=0 entirely
-    Jobs.compactServingPartials(spark, serving, uptoEpoch = 3)
-    val out = Jobs.servingFromPartials(spark, serving).orderBy("event_type")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(out == Seq(("click", 2L, 30.0), ("view", 1L, 5.0)), s"got $out")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$serving.compact_tmp")))
+    // three committed epoch partials in the declared schema
+    def partials(): String = {
+      val serving = s"${Files.createTempDirectory("graft_recover")}/serving"
+      Seq((0L, "click", 10.0), (1L, "click", 20.0), (2L, "view", 5.0)).foreach {
+        case (epoch, typ, total) =>
+          EpochManifest.append(Seq((typ, 1L, total)).toDF("event_type", "n", "total_dec")
+            .withColumn("total_dec", col("total_dec").cast("decimal(28,4)")),
+            Jobs.partialsRoot(serving), epoch)
+      }
+      serving
+    }
+    def served(serving: String): Seq[(String, Long, Double)] =
+      Jobs.servingFromPartials(spark, serving).orderBy("event_type")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    val exact = Seq(("click", 2L, 30.0), ("view", 1L, 5.0))
+
+    // (1) crash after the fold dir was claimed and written, before its
+    // manifest commit: the dir holds deliberately WRONG rows, and no
+    // manifest names it, so reads never see them
+    val s1 = partials()
+    val root1 = Jobs.partialsRoot(s1)
+    val crashed = EpochManifest.newFoldDir(spark, root1, 2L)
+    Seq(("click", 99L, 999.0)).toDF("event_type", "n", "total_dec")
+      .withColumn("total_dec", col("total_dec").cast("decimal(28,4)"))
+      .write.parquet(s"$root1/$crashed")
+    assert(served(s1) == exact, s"uncommitted fold leaked: ${served(s1)}")
+    // the next compaction claims a fresh fold dir and completes
+    Jobs.compactServingPartials(spark, s1, uptoEpoch = 3)
+    val es1 = EpochManifest.entries(spark, root1)
+    assert(es1.size == 1 && es1.head.dir != crashed && es1.head.minEpoch == 0L,
+      s"compaction did not complete past the crashed fold: $es1")
+    assert(served(s1) == exact, s"after compaction: ${served(s1)}")
+
+    // (2) crash after the manifest commit, before gc: the superseded
+    // epoch dirs are still on disk, but only the fold is visible
+    val s2 = partials()
+    val root2 = Jobs.partialsRoot(s2)
+    val es2 = EpochManifest.entries(spark, root2)
+    val fold = EpochManifest.newFoldDir(spark, root2, 2L)
+    Jobs.servingFromPartials(spark, s2)
+      .select(col("event_type"), col("n"), col("total").cast("decimal(28,4)").as("total_dec"))
+      .write.parquet(s"$root2/$fold")
+    EpochManifest.commitWith(spark, root2)(EpochManifest.rebaseFold(es2, es2,
+      EpochManifest.Entry(2L, fold, lo = 0L)))
+    assert(es2.forall(e => fs.exists(new org.apache.hadoop.fs.Path(s"$root2/${e.dir}"))),
+      "the superseded epoch dirs must still be on disk for this crash point")
+    assert(served(s2) == exact, s"committed-but-not-gc'd swap: ${served(s2)}")
+    // the next compaction is a no-op (one covered entry), and the gc
+    // the crash skipped changes nothing serving reads
+    Jobs.compactServingPartials(spark, s2, uptoEpoch = 3)
+    EpochManifest.gc(spark, root2)
+    assert(served(s2) == exact, s"after gc: ${served(s2)}")
   }
 
   test("in-line compaction bounds the partial store over many epochs") {
@@ -461,13 +490,28 @@ class StreamingSpec extends SparkSpec {
       Jobs.clean(Jobs.readEventStream(spark, src, maxFilesPerTrigger = 1)),
       s"$dir/raw", s"$dir/serving", s"$dir/cp", compactEvery = 2)
     q.awaitTermination(120000)
-    // without in-line compaction this would be 9 dirs — one per epoch
-    val fs = new org.apache.hadoop.fs.Path(dir)
+    assert(q.exception.isEmpty, s"stream failed: ${q.exception}")
+    // without in-line compaction this would be 9 entries — one per epoch
+    val root = Jobs.partialsRoot(s"$dir/serving")
+    val entries = graft.core.EpochManifest.entries(spark, root)
+    assert(entries.length <= 3,
+      s"partial store not bounded: ${entries.length} manifest entries")
+    assert(entries.exists(e => e.minEpoch < e.epoch),
+      s"no compaction fold was committed: $entries")
+    // every committed dir — epoch partial or fold — carries the one
+    // declared schema in its parquet footers (a fold that widened
+    // total_dec made reads fail on whichever file was inferred first)
+    val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partialDirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/serving.partials"))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-    assert(partialDirs.length <= 3,
-      s"partial store not bounded: ${partialDirs.length} epoch dirs")
+    entries.foreach { e =>
+      val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/${e.dir}"))
+        .map(_.getPath.toString).filter(_.endsWith(".parquet"))
+      assert(files.nonEmpty, s"${e.dir} holds no parquet file")
+      files.foreach { f =>
+        assert(spark.read.parquet(f).schema == Jobs.partialsSchema,
+          s"$f footer schema ${spark.read.parquet(f).schema.simpleString}")
+      }
+    }
     // and the compacted serving aggregate is identical to the all-at-once
     // batch aggregate over the same events (decimal fold = exact)
     val serving = spark.read.parquet(s"$dir/serving").orderBy("event_type")

@@ -21,8 +21,11 @@ def main() -> None:
           f"B total={b['value']:.3f}s (cpus={b.get('cpus')})  "
           f"common={len(common)}")
     ratios = [qa[q] / qb[q] for q in common if qa[q] > 0 and qb[q] > 0]
-    geo = math.exp(sum(math.log(r) for r in ratios) / len(ratios))
-    print(f"geomean speedup A->B: {geo:.3f}")
+    if ratios:
+        geo = math.exp(sum(math.log(r) for r in ratios) / len(ratios))
+        print(f"geomean speedup A->B: {geo:.3f}")
+    else:
+        print("geomean speedup A->B: n/a (no common positive-time queries)")
     rows = []
     for q in common:
         d = qb[q] - qa[q]
