@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** Benchmark main (driver contract): run every catalog query at the
   * SPARK_GRAFT_SF_DIR scale factor and print ONE JSON line.
@@ -71,7 +71,22 @@ object Bench {
     * configuration the bench measures (r18 shipped a PlanDump whose
     * join strategies diverged from the bench's). The one documented
     * difference: PlanAudit turns AQE off on top, because AQE hides
-    * codegen markers and join strategies until execution. */
+    * codegen markers and join strategies until execution.
+    *
+    * Codegen reuse: each generated class compiles once per JVM. Spark
+    * keys its compiled-class cache (`CodeGenerator.cache`) on (context
+    * classloader, code), and two defaults defeated it. (1) Its 100-entry
+    * LRU is smaller than one pass of the 7 benchmark read queries (187
+    * distinct classes; the catalog at sf0.01 compiles 1,884), so each
+    * pass evicted what the next needed: 4096 entries hold the catalog.
+    * (2) With artifact isolation on, every `newSession()` (the
+    * `q_store_*` queries' private sessions, the streaming query's
+    * cloned session) gets its own classloader and so its own cache keys:
+    * one lakehouse run compiled 76 distinct code bodies 571 times.
+    * The library never adds an artifact (no `addArtifact` / `addJar` /
+    * `ADD JAR`), so sessions sharing the JVM's loader lose nothing.
+    * Both are static confs, read only when the session is built — they
+    * belong here and nowhere else. */
   def sessionBuilder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -89,10 +104,15 @@ object Bench {
       // adds nothing
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** One query's two timed attempts: `Right(seconds)` per successful
-    * run, `Left(message)` per failed one. */
-  final case class QResult(name: String, runs: Seq[Either[String, Double]]) {
+    * run, `Left(message)` per failed one, and per run the number of
+    * classes codegen compiled during it (a warm run should compile
+    * none; a recompile regression shows here per query). */
+  final case class QResult(name: String, runs: Seq[Either[String, Double]],
+                           compiles: Seq[Long] = Nil) {
     def best: Option[Double] = {
       val ok = runs.collect { case Right(t) => t }
       if (ok.isEmpty) None else Some(ok.min)
@@ -106,9 +126,10 @@ object Bench {
               queries: Map[String, (SparkSession, String) => DataFrame],
               sfDir: String): Seq[QResult] =
     queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Either[String, Double] = {
+      def once(): (Either[String, Double], Long) = {
+        val c0 = GraftBridge.codegenCompiles
         val t0 = System.nanoTime()
-        try {
+        val run = try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           Right((System.nanoTime() - t0) / 1e9)
         } catch { case e: Throwable =>
@@ -116,8 +137,10 @@ object Bench {
           System.err.println(s"[bench] $name failed: $msg")
           Left(msg.linesIterator.take(2).mkString(" | ").take(300))
         }
+        (run, GraftBridge.codegenCompiles - c0)
       }
-      QResult(name, Seq(once(), once()))
+      val (runs, compiles) = Seq(once(), once()).unzip
+      QResult(name, runs, compiles)
     }
 
   private def r3(d: Double): Double = math.round(d * 1000.0) / 1000.0
@@ -201,7 +224,8 @@ object Bench {
 
   /** (profile JSON, tiny stdout line) for a measurement set. Failed runs
     * render as `null` in "runs"; fully-failed queries move from "queries"
-    * to "err" and contribute nothing to "value". */
+    * to "err" and contribute nothing to "value". "compiles" holds each
+    * run's codegen compile count, in the order of "runs". */
   def render(results: Seq[QResult], sfDir: String,
              profilePath: String,
              telemetry: String = "",
@@ -215,6 +239,8 @@ object Bench {
         q.runs.map { case Right(t) => r3(t).toString; case Left(_) => "null" }
           .mkString(",") + "]"
     }.mkString("{", ",", "}")
+    val compiles = results.map(q => jstr(q.name) + ":" + q.compiles.mkString("[", ",", "]"))
+      .mkString("{", ",", "}")
     val err = failed.map(q => jstr(q.name) + ":" + jstr(q.firstErr.getOrElse("")))
       .mkString("{", ",", "}")
     val total = r3(measured.map(_.best.get).sum)
@@ -223,7 +249,7 @@ object Bench {
       s"""{"metric":"total","unit":"sec","sf":${jstr(sfDir)},"n":${results.size},""" +
         telemetry +
         s""""reruns":$rer,""" +
-        s""""errors":${failed.size},"err":$err,"queries":$qs,"runs":$runs,"value":$total}"""
+        s""""errors":${failed.size},"err":$err,"queries":$qs,"runs":$runs,"compiles":$compiles,"value":$total}"""
     val stdoutLine =
       s"""{"metric":"total","unit":"sec","sf":${jstr(sfDir)},"n":${results.size},""" +
         s""""profile":${jstr(profilePath)},"errors":${failed.size},"queries":{},"value":$total}"""
@@ -279,9 +305,10 @@ object Bench {
           s"[bench] stall-suspect window re-run: ${suspects.mkString(", ")}")
         val redo = measure(spark,
           selected.view.filterKeys(suspects.toSet).toMap, sfDir)
-          .map(q => q.name -> q.runs.take(1)).toMap
-        results0.map(q =>
-          redo.get(q.name).map(r => q.copy(runs = q.runs ++ r)).getOrElse(q))
+          .map(q => q.name -> q).toMap
+        results0.map(q => redo.get(q.name).map(r => q.copy(
+          runs = q.runs ++ r.runs.take(1),
+          compiles = q.compiles ++ r.compiles.take(1))).getOrElse(q))
       }
     val (laEnd, jvmsEnd) = loadTelemetry()
     // self-adjudication: a run whose loadavg exceeds its own CPU budget

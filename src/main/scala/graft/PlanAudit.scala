@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.util.{Failure, Success, Try}
 import graft.core.Tables
 import graft.queries._
 
@@ -44,26 +45,36 @@ object PlanAudit {
     * shuffle-partition count. `main` and PlanSpec both set this up. */
   def run(spark: SparkSession, sfDir: String): Seq[Audit] = {
     val audits = Seq.newBuilder[Audit]
-    def check(name: String, p: String, what: String, pred: String => Boolean): Unit =
-      audits += Audit(name, what, pred(p))
+    // a query whose plan cannot be built (a missing input, say) records
+    // one failed "plan builds" audit, and every other query is still
+    // audited
+    def built[T](name: String)(body: => T): Option[T] = Try(body) match {
+      case Success(t) => Some(t)
+      case Failure(e) =>
+        val first = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+        audits += Audit(name, s"plan builds: ${e.getClass.getSimpleName}: $first", ok = false)
+        None
+    }
+    def check(name: String, p: Option[String], what: String, pred: String => Boolean): Unit =
+      p.foreach(text => audits += Audit(name, what, pred(text)))
 
-    val scan = plan(TpchCatalog.scanFilter(spark, sfDir))
+    val scan = built("q_scan_filter")(plan(TpchCatalog.scanFilter(spark, sfDir)))
     check("q_scan_filter", scan, "filters pushed to parquet scan",
       _.contains("PushedFilters: [IsNotNull(l_shipdate), IsNotNull(l_quantity)"))
     check("q_scan_filter", scan, "column pruning (5-col ReadSchema, no l_tax)",
       p => p.contains("l_extendedprice") && !p.split("ReadSchema").last.contains("l_tax"))
 
-    val joins = plan(TpchCatalog.joinMulti(spark, sfDir))
+    val joins = built("q_join_multi")(plan(TpchCatalog.joinMulti(spark, sfDir)))
     check("q_join_multi", joins, "dimension chain broadcasts",
       p => p.linesIterator.count(_.contains("BroadcastHashJoin")) >= 3)
     check("q_join_multi", joins, "partial+final hash aggregation",
       p => p.linesIterator.count(_.contains("HashAggregate")) >= 2)
 
-    val topk = plan(TpchCatalog.topK(spark, sfDir))
+    val topk = built("q_topk")(plan(TpchCatalog.topK(spark, sfDir)))
     check("q_topk", topk, "TakeOrderedAndProject (no full sort)",
       p => p.contains("TakeOrderedAndProject") && !p.contains("GlobalSort"))
 
-    val agg = plan(TpchCatalog.pricingSummary(spark, sfDir))
+    val agg = built("q_pricing_summary")(plan(TpchCatalog.pricingSummary(spark, sfDir)))
     check("q_pricing_summary", agg, "whole-stage codegen over scan+agg",
       p => p.contains("WholeStageCodegen") || p.contains("*(1)"))
     check("q_pricing_summary", agg, "partial aggregation before exchange",
@@ -73,12 +84,12 @@ object PlanAudit {
     // the bounded-heap top-k must plan as partial+final ObjectHashAggregate:
     // a partial-only or sort-based plan would shuffle every row and erase
     // the k×keys-per-map-partition win over the row_number window form
-    val gtopk = plan(TpchCatalog.groupTopK(spark, sfDir))
+    val gtopk = built("q_group_topk")(plan(TpchCatalog.groupTopK(spark, sfDir)))
     check("q_group_topk", gtopk, "partial+final ObjectHashAggregate (heap combine map-side)",
       p => p.linesIterator.count(_.contains("ObjectHashAggregate")) >= 2 &&
         p.contains("partial_top_k"))
 
-    val knn = plan(VectorCatalog.knnBrute(spark, sfDir))
+    val knn = built("q_vec_knn_brute")(plan(VectorCatalog.knnBrute(spark, sfDir)))
     check("q_vec_knn_brute", knn, "one narrow scoring pass (no join operator at all)",
       p => !p.contains("Join") && !p.contains("CartesianProduct"))
     // ...and the per-query top-k must be the bounded-heap aggregate with a
@@ -89,44 +100,46 @@ object PlanAudit {
       p => p.linesIterator.count(_.contains("ObjectHashAggregate")) >= 2 &&
         p.contains("partial_top_k") && !p.contains("Window"))
 
-    val semi = plan(TpchCatalog.semiJoin(spark, sfDir))
+    val semi = built("q_semi_join")(plan(TpchCatalog.semiJoin(spark, sfDir)))
     check("q_semi_join", semi, "left-semi strategy",
       p => p.contains("LeftSemi"))
 
     // bucketed co-located join: same bucket count both sides → no shuffle
     import graft.core.IO
-    IO.writeBucketed(Tables.orders(spark, sfDir).limit(1000), "b_orders", "o_custkey", 8)
-    IO.writeBucketed(Tables.customer(spark, sfDir), "b_customer", "c_custkey", 8)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    val bjoin = plan(IO.bucketedJoin(spark, "b_orders", "b_customer", "o_custkey", "c_custkey"))
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    val bjoin = built("bucketed_join") {
+      IO.writeBucketed(Tables.orders(spark, sfDir).limit(1000), "b_orders", "o_custkey", 8)
+      IO.writeBucketed(Tables.customer(spark, sfDir), "b_customer", "c_custkey", 8)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
+      try plan(IO.bucketedJoin(spark, "b_orders", "b_customer", "o_custkey", "c_custkey"))
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
     check("bucketed_join", bjoin, "co-located SortMergeJoin with ZERO exchange",
       p => p.contains("SortMergeJoin") && !p.contains("Exchange"))
 
     // the prefix-filtered similarity join must stay keyed on
     // (source, prefix-hash) — a cartesian or nested-loop fallback here is
     // exactly the O(n²) blowup the prefix bound exists to avoid
-    val ngram = plan(TextCatalog.ngramSimilarityPrefix(spark, sfDir))
+    val ngram = built("q_doc_ngram_sim")(plan(TextCatalog.ngramSimilarityPrefix(spark, sfDir)))
     check("q_doc_ngram_sim", ngram, "postings self-join keyed (no cartesian/BNLJ)",
       p => !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
 
     // listing queries must scan the landed parquet copy, not re-read the
     // 317 multiLine JSON files (the round-3 bench anomaly)
-    val listing = plan(ListingCatalog.normalize(spark, sfDir))
+    val listing = built("q_listing_normalize")(plan(ListingCatalog.normalize(spark, sfDir)))
     check("q_listing_normalize", listing, "landed columnar scan (parquet, not multiLine json)",
       p => p.contains("FileScan parquet") && !p.contains("FileScan json"))
 
     // the LSH bucket-occupancy guard must survive optimization: its
     // assert_true lowers to raise_error, which must appear in the final
     // physical plan (VectorSpec separately proves it fires at runtime)
-    val ann = plan(VectorCatalog.annLsh(spark, sfDir))
+    val ann = built("q_vec_ann_lsh")(plan(VectorCatalog.annLsh(spark, sfDir)))
     check("q_vec_ann_lsh", ann, "bucket-occupancy guard in final plan (raise_error)",
       p => p.contains("raise_error"))
 
     // the SpaceSaving sketch must combine map-side like the top-k heap:
     // partial+final ObjectHashAggregate, so the exchange carries m-counter
     // buffers per map partition instead of raw rows
-    val hh = plan(TpchCatalog.heavyHittersQ(spark, sfDir))
+    val hh = built("q_heavy_hitters")(plan(TpchCatalog.heavyHittersQ(spark, sfDir)))
     check("q_heavy_hitters", hh, "partial+final ObjectHashAggregate (sketch combine map-side)",
       p => p.linesIterator.count(_.contains("ObjectHashAggregate")) >= 2 &&
         p.contains("partial_heavy_hitters"))
@@ -134,7 +147,7 @@ object PlanAudit {
     // IVF candidate selection must broadcast the tiny probe side and hash
     // the corpus on list_id — a nested-loop or cartesian fallback would
     // re-create the O(N·Q) scan the inverted lists exist to avoid
-    val ivf = plan(VectorCatalog.annIvf(spark, sfDir))
+    val ivf = built("q_vec_ann_ivf")(plan(VectorCatalog.annIvf(spark, sfDir)))
     check("q_vec_ann_ivf", ivf, "probe side broadcast (hash join, no cartesian/BNLJ)",
       p => p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin"))
@@ -143,7 +156,7 @@ object PlanAudit {
     // the fact side (that pre-exchange prune is the operator's entire
     // point), with the join itself a broadcast — never a fallback that
     // re-shuffles the rows the probe was built to drop
-    val bloom = plan(TpchCatalog.bloomJoin(spark, sfDir))
+    val bloom = built("q_bloom_join")(plan(TpchCatalog.bloomJoin(spark, sfDir)))
     check("q_bloom_join", bloom, "might_contain probe filter + broadcast join",
       p => p.contains("might_contain") && p.contains("BroadcastHashJoin") &&
         !p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
@@ -151,14 +164,14 @@ object PlanAudit {
     // the mixture's per-group rate tables are tiny aggregates that must
     // come back to the corpus as broadcasts — a sort-merge join here
     // would shuffle the full corpus for a 5-row dimension
-    val mix = plan(TextCatalog.mixture(spark, sfDir))
+    val mix = built("q_doc_mixture")(plan(TextCatalog.mixture(spark, sfDir)))
     check("q_doc_mixture", mix, "rate tables broadcast back (no corpus SMJ)",
       p => p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"))
 
     // the source cap computes source total, running sum, and rank in ONE
     // window pass: exactly one hash-partitioning exchange (the final
     // presentation sort adds a range exchange, which is fine)
-    val cap = plan(TextCatalog.sourceCap(spark, sfDir))
+    val cap = built("q_doc_source_cap")(plan(TextCatalog.sourceCap(spark, sfDir)))
     check("q_doc_source_cap", cap, "single window shuffle (one hashpartitioning exchange)",
       p => p.linesIterator.count(l =>
         l.contains("Exchange hashpartitioning")) == 1)
@@ -166,7 +179,7 @@ object PlanAudit {
     // the ORC round-trip must get the same source-side treatment as
     // parquet: predicate pushdown into the ORC scan (both filter
     // conjuncts) — format parity is about the plan, not just the rows
-    val orc = plan(MiscCatalog.orcRoundtrip(spark, sfDir))
+    val orc = built("q_orc_roundtrip")(plan(MiscCatalog.orcRoundtrip(spark, sfDir)))
     check("q_orc_roundtrip", orc, "both filter conjuncts pushed into the ORC scan",
       p => p.linesIterator.exists(l =>
           l.contains("Scan") && l.toLowerCase.contains("orc")) &&
@@ -176,20 +189,20 @@ object PlanAudit {
     // the inverted-index posting head must plan as the bounded heap with
     // a map-side partial — a collect_list/window fallback would carry a
     // stopword's ENTIRE posting list through the exchange
-    val inv = plan(TextCatalog.invertedIndex(spark, sfDir))
+    val inv = built("q_doc_inverted")(plan(TextCatalog.invertedIndex(spark, sfDir)))
     check("q_doc_inverted", inv, "posting head partial+final ObjectHashAggregate",
       p => p.linesIterator.count(_.contains("ObjectHashAggregate")) >= 2 &&
         p.contains("partial_top_k") && !p.contains("Window"))
 
     // the MV roll-up must be REWRITTEN off the base table: the plan's
     // only file scan is the materialized store, never lineitem
-    val mvq = plan(TpchCatalog.mvRollup(spark, sfDir))
+    val mvq = built("q_mv_rollup")(plan(TpchCatalog.mvRollup(spark, sfDir)))
     check("q_mv_rollup", mvq, "aggregate rewritten to the MV scan (base table gone)",
       p => !p.contains("lineitem.parquet") && p.contains("graft_mv_store"))
 
     // the time-bucketed roll-up (r12): a month query composed from the
     // day-bucket store — the base orders scan must be gone
-    val mvt = plan(TpchCatalog.mvTimeRollup(spark, sfDir))
+    val mvt = built("q_mv_time_rollup")(plan(TpchCatalog.mvTimeRollup(spark, sfDir)))
     check("q_mv_time_rollup", mvt, "month roll-up composed from the day-bucket MV (base gone)",
       p => !p.contains("orders.parquet") && p.contains("graft_mv_time"))
 
@@ -197,7 +210,7 @@ object PlanAudit {
     // optimizer rule into the hybrid hot/cold union — hot slice
     // broadcast, cold remainder co-partitioned, and the union visible in
     // the final plan
-    val jauto = plan(EventsCatalog.joinAuto(spark, sfDir))
+    val jauto = built("q_join_auto")(plan(EventsCatalog.joinAuto(spark, sfDir)))
     check("q_join_auto", jauto, "hybrid hot/cold union with a broadcast hot slice",
       p => p.contains("Union") && p.contains("BroadcastHashJoin"))
 
@@ -206,7 +219,7 @@ object PlanAudit {
     // top-20 compiles to TakeOrderedAndProject, never a global sort.
     // (The 1-row stats side arrives via broadcast nested-loop — correct
     // for a single-row cross join, so no BNLJ prohibition here.)
-    val bm = plan(TextCatalog.bm25(spark, sfDir))
+    val bm = built("q_doc_bm25")(plan(TextCatalog.bm25(spark, sfDir)))
     check("q_doc_bm25", bm, "df broadcast + TakeOrderedAndProject top-20",
       p => p.contains("TakeOrderedAndProject") &&
         p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"))
@@ -216,14 +229,14 @@ object PlanAudit {
     // at all: a cartesian/BNLJ fallback is the O(N²) scan the cells
     // exist to avoid, and even a keyed self-join would recompute the
     // Lloyd assignment per side
-    val sem = plan(VectorCatalog.semDedup(spark, sfDir))
+    val sem = built("q_vec_semdedup")(plan(VectorCatalog.semDedup(spark, sfDir)))
     check("q_vec_semdedup", sem, "within-cell array pairing (no join operator at all)",
       p => !p.contains("Join") && !p.contains("CartesianProduct"))
 
     // the composed IVF-PQ search keeps IVF's candidate contract: probe
     // side broadcast, no cartesian/BNLJ resurrection through the extra
     // code join
-    val ivfpq = plan(VectorCatalog.annIvfPq(spark, sfDir))
+    val ivfpq = built("q_vec_ann_ivf_pq")(plan(VectorCatalog.annIvfPq(spark, sfDir)))
     check("q_vec_ann_ivf_pq", ivfpq, "probe broadcast + keyed code join (no cartesian/BNLJ)",
       p => p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin"))
@@ -232,7 +245,8 @@ object PlanAudit {
     // history scan — a sort-merge fallback would shuffle the history,
     // which is the exact anti-pattern the incremental path exists to
     // avoid
-    val mincr = plan(graft.multimodal.Multimodal.mediaDedupIncr(spark, sfDir))
+    val mincr = built("q_media_dedup_incr")(
+      plan(graft.multimodal.Multimodal.mediaDedupIncr(spark, sfDir)))
     check("q_media_dedup_incr", mincr, "new batch broadcast into history scan (no SMJ)",
       p => p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"))
 
@@ -299,10 +313,12 @@ object PlanAudit {
       oneSided.isEmpty)
 
     // date-partitioned layout: time predicate prunes at directory level
-    val pdir = java.nio.file.Files.createTempDirectory("graft_part").toString
-    IO.writePartitioned(
-      Tables.events(spark, sfDir).withColumn("d", to_date(col("ts"))), s"$pdir/ev", "d")
-    val pread = plan(IO.readPartition(spark, s"$pdir/ev", "d", "2024-01-05"))
+    val pread = built("partition_pruning") {
+      val pdir = java.nio.file.Files.createTempDirectory("graft_part").toString
+      IO.writePartitioned(
+        Tables.events(spark, sfDir).withColumn("d", to_date(col("ts"))), s"$pdir/ev", "d")
+      plan(IO.readPartition(spark, s"$pdir/ev", "d", "2024-01-05"))
+    }
     check("partition_pruning", pread, "date predicate prunes partitions at the scan",
       p => p.contains("PartitionFilters: [isnotnull(d") && p.contains("= 2024-01-05"))
 
@@ -311,41 +327,40 @@ object PlanAudit {
     // (partition filters present, no data-filter duplicate) and whose
     // dir pruning keeps no more bucket dirs than the probed terms hash
     // to — the engine-grade form of the persisted-index pruning proof
-    val search = TextCatalog.docSearch(spark, sfDir)
-    val storeScans = search.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        r.scan
-    }.collect { case s: graft.sources.EpochStoreScan => s }
-    audits += Audit("q_doc_search", "probe reads through the epochstore DSv2 scan",
-      storeScans.size == 1)
-    storeScans.foreach { s =>
-      audits += Audit("q_doc_search",
-        s"bucket filter pushed to the connector (${s.partFilters.mkString(", ")})",
-        s.partFilters.nonEmpty)
-      val (sel, tot) = s.selectedPartitionDirs
-      audits += Audit("q_doc_search",
-        s"partition dirs pruned at scan planning ($sel/$tot kept)",
-        sel <= 5 * s.entries.size && sel < tot)
+    def storeScansOf(df: org.apache.spark.sql.DataFrame)
+        : Seq[graft.sources.EpochStoreScan] =
+      df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2
+          .DataSourceV2ScanRelation => r.scan
+      }.collect { case s: graft.sources.EpochStoreScan => s }
+    built("q_doc_search") {
+      val storeScans = storeScansOf(TextCatalog.docSearch(spark, sfDir))
+      audits += Audit("q_doc_search", "probe reads through the epochstore DSv2 scan",
+        storeScans.size == 1)
+      storeScans.foreach { s =>
+        audits += Audit("q_doc_search",
+          s"bucket filter pushed to the connector (${s.partFilters.mkString(", ")})",
+          s.partFilters.nonEmpty)
+        val (sel, tot) = s.selectedPartitionDirs
+        audits += Audit("q_doc_search",
+          s"partition dirs pruned at scan planning ($sel/$tot kept)",
+          sel <= 5 * s.entries.size && sel < tot)
+      }
     }
 
     // catalog-plugin SQL (r12): the SQL-resolved store must read through
     // the SAME pinned EpochStoreScan as the programmatic path — catalog
     // resolution adds naming, never a different (unpruned) scan
-    val sqlStore = MiscCatalog.storeSql(spark, sfDir)
-    val sqlScans = sqlStore.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        r.scan
-    }.collect { case s: graft.sources.EpochStoreScan => s }
-    audits += Audit("q_store_sql",
-      "catalog-resolved SQL reads through the epochstore DSv2 scan",
-      sqlScans.size == 1)
+    built("q_store_sql") {
+      audits += Audit("q_store_sql",
+        "catalog-resolved SQL reads through the epochstore DSv2 scan",
+        storeScansOf(MiscCatalog.storeSql(spark, sfDir)).size == 1)
+    }
 
     // dynamic partition pruning through the connector (r12): the dim's
     // joined lang set must reach EpochStoreScan.filter at RUNTIME (no
     // static lang predicate exists on the store side) and shrink the
     // listed dir set — execute first, the filter only lands then
-    val dpp = MiscCatalog.storeDpp(spark, sfDir)
-    dpp.collect()
     def physNodes(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -354,125 +369,131 @@ object PlanAudit {
         q +: physNodes(q.plan)
       case other => other +: other.children.flatMap(physNodes)
     }
-    val dppScans = physNodes(dpp.queryExecution.executedPlan).collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-        b.scan
-    }.collect { case s: graft.sources.EpochStoreScan => s }
-    audits += Audit("q_store_dpp",
-      "join executes through the epochstore DSv2 scan", dppScans.size == 1)
-    dppScans.foreach { s =>
+    built("q_store_dpp") {
+      val dpp = MiscCatalog.storeDpp(spark, sfDir)
+      dpp.collect()
+      val dppScans = physNodes(dpp.queryExecution.executedPlan).collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan
+      }.collect { case s: graft.sources.EpochStoreScan => s }
       audits += Audit("q_store_dpp",
-        "the dim's joined partition set reached the scan at runtime",
-        s.runtimeFiltered)
-      val (sel, tot) = s.selectedPartitionDirs
-      audits += Audit("q_store_dpp",
-        s"runtime pruning shrank the dir listing ($sel/$tot kept)",
-        sel < tot)
+        "join executes through the epochstore DSv2 scan", dppScans.size == 1)
+      dppScans.foreach { s =>
+        audits += Audit("q_store_dpp",
+          "the dim's joined partition set reached the scan at runtime",
+          s.runtimeFiltered)
+        val (sel, tot) = s.selectedPartitionDirs
+        audits += Audit("q_store_dpp",
+          s"runtime pruning shrank the dir listing ($sel/$tot kept)",
+          sel < tot)
+      }
     }
 
     // metadata-only aggregation (r12): the pushed COUNT/MIN/MAX must
     // plan as the footer-statistics scan — if a row scan survives, the
     // "how big is this table" query is reading the table again
-    val storeAgg = MiscCatalog.storeAgg(spark, sfDir)
-    val aggScans = storeAgg.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        r.scan
+    built("q_store_agg") {
+      val aggScans = MiscCatalog.storeAgg(spark, sfDir).queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+          r.scan
+      }
+      audits += Audit("q_store_agg",
+        "aggregate pushed: the plan scans footers, not rows",
+        aggScans.size == 1 &&
+          aggScans.head.isInstanceOf[graft.sources.EpochStoreAggScan])
     }
-    audits += Audit("q_store_agg",
-      "aggregate pushed: the plan scans footers, not rows",
-      aggScans.size == 1 &&
-        aggScans.head.isInstanceOf[graft.sources.EpochStoreAggScan])
 
     // bloom file-skipping (r12): the point lookup must consult the
     // sidecars and open fewer files than it listed
-    val bloomQ = MiscCatalog.storeBloomskip(spark, sfDir)
-    val bloomScans = bloomQ.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        r.scan
-    }.collect { case s: graft.sources.EpochStoreScan => s }
-    audits += Audit("q_store_bloomskip",
-      "lookup reads through the epochstore scan", bloomScans.size == 1)
-    bloomScans.foreach { s =>
-      val (kept, tot) = s.skippedFilesAudit
+    built("q_store_bloomskip") {
+      val bloomScans = storeScansOf(MiscCatalog.storeBloomskip(spark, sfDir))
       audits += Audit("q_store_bloomskip",
-        s"bloom sidecars skipped files ($kept/$tot kept)",
-        tot >= 5 && kept < tot)
+        "lookup reads through the epochstore scan", bloomScans.size == 1)
+      bloomScans.foreach { s =>
+        val (kept, tot) = s.skippedFilesAudit
+        audits += Audit("q_store_bloomskip",
+          s"bloom sidecars skipped files ($kept/$tot kept)",
+          tot >= 5 && kept < tot)
+      }
     }
-
-    def storeScansOf(df: org.apache.spark.sql.DataFrame)
-        : Seq[graft.sources.EpochStoreScan] =
-      df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.v2
-          .DataSourceV2ScanRelation => r.scan
-      }.collect { case s: graft.sources.EpochStoreScan => s }
 
     // stats-sidecar file skipping (r12): the range probe must plan only
     // the files whose recorded [min, max] intersects it
-    val statScans = storeScansOf(MiscCatalog.storeStatskip(spark, sfDir))
-    audits += Audit("q_store_statskip",
-      "range probe reads through the epochstore scan", statScans.size == 1)
-    statScans.foreach { s =>
-      val (kept, tot) = s.skippedFilesAudit
+    built("q_store_statskip") {
+      val statScans = storeScansOf(MiscCatalog.storeStatskip(spark, sfDir))
       audits += Audit("q_store_statskip",
-        s"stats sidecars skipped files ($kept/$tot kept)",
-        tot >= 4 && kept < tot)
+        "range probe reads through the epochstore scan", statScans.size == 1)
+      statScans.foreach { s =>
+        val (kept, tot) = s.skippedFilesAudit
+        audits += Audit("q_store_statskip",
+          s"stats sidecars skipped files ($kept/$tot kept)",
+          tot >= 4 && kept < tot)
+      }
     }
 
     // sorted store + pushed TopN (r12): ORDER BY n_chars LIMIT 20 must
     // reach the scan as a TopN and open only the bound-covering files
-    val topScans = storeScansOf(MiscCatalog.storeTopn(spark, sfDir))
-    audits += Audit("q_store_topn",
-      "ORDER BY LIMIT pushed into the scan as a TopN",
-      topScans.size == 1 && topScans.head.topN.nonEmpty)
-    topScans.foreach { s =>
-      val (kept, tot) = s.skippedFilesAudit
+    built("q_store_topn") {
+      val topScans = storeScansOf(MiscCatalog.storeTopn(spark, sfDir))
       audits += Audit("q_store_topn",
-        s"TopN file bound skipped files ($kept/$tot kept)",
-        tot >= 8 && kept < tot)
+        "ORDER BY LIMIT pushed into the scan as a TopN",
+        topScans.size == 1 && topScans.head.topN.nonEmpty)
+      topScans.foreach { s =>
+        val (kept, tot) = s.skippedFilesAudit
+        audits += Audit("q_store_topn",
+          s"TopN file bound skipped files ($kept/$tot kept)",
+          tot >= 8 && kept < tot)
+      }
     }
 
     // z-ordered store (r12): the 2-D rectangle must skip files on BOTH
     // dimensions' recorded stats
-    val zScans = storeScansOf(MiscCatalog.storeZorder(spark, sfDir))
-    audits += Audit("q_store_zorder",
-      "2-D probe reads through the epochstore scan", zScans.size == 1)
-    zScans.foreach { s =>
-      val (kept, tot) = s.skippedFilesAudit
+    built("q_store_zorder") {
+      val zScans = storeScansOf(MiscCatalog.storeZorder(spark, sfDir))
       audits += Audit("q_store_zorder",
-        s"z-curve stats skipped files ($kept/$tot kept)",
-        tot >= 8 && kept < tot)
+        "2-D probe reads through the epochstore scan", zScans.size == 1)
+      zScans.foreach { s =>
+        val (kept, tot) = s.skippedFilesAudit
+        audits += Audit("q_store_zorder",
+          s"z-curve stats skipped files ($kept/$tot kept)",
+          tot >= 8 && kept < tot)
+      }
     }
 
     // sidecar-answered aggregation (r12): the grouped COUNT/MIN/MAX over
     // the stats-declared store must fold on the driver — zero file opens
-    val metaScans = MiscCatalog.storeAggMeta(spark, sfDir)
-      .queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.v2
-          .DataSourceV2ScanRelation => r.scan
-      }.collect { case s: graft.sources.EpochStoreAggScan => s }
-    audits += Audit("q_store_agg_meta",
-      "aggregate pushed: the plan carries the agg scan", metaScans.size == 1)
-    audits += Audit("q_store_agg_meta",
-      "answer folded from the stats sidecars (no file, no footer opened)",
-      metaScans.headOption.exists(_.answeredFromSidecars))
+    built("q_store_agg_meta") {
+      val metaScans = MiscCatalog.storeAggMeta(spark, sfDir)
+        .queryExecution.optimizedPlan.collect {
+          case r: org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2ScanRelation => r.scan
+        }.collect { case s: graft.sources.EpochStoreAggScan => s }
+      audits += Audit("q_store_agg_meta",
+        "aggregate pushed: the plan carries the agg scan", metaScans.size == 1)
+      audits += Audit("q_store_agg_meta",
+        "answer folded from the stats sidecars (no file, no footer opened)",
+        metaScans.headOption.exists(_.answeredFromSidecars))
+    }
 
     // stats-preserving compaction (r12): the SAME range probe that the
     // interleaved history couldn't prune must skip on the re-sorted,
     // stats-re-derived fold
-    val cScans = storeScansOf(MiscCatalog.storeCompact(spark, sfDir))
-    audits += Audit("q_store_compact",
-      "post-fold probe reads through the epochstore scan", cScans.size == 1)
-    cScans.foreach { s =>
-      val (kept, tot) = s.skippedFilesAudit
+    built("q_store_compact") {
+      val cScans = storeScansOf(MiscCatalog.storeCompact(spark, sfDir))
       audits += Audit("q_store_compact",
-        s"re-derived fold stats skipped files ($kept/$tot kept)",
-        tot >= 4 && kept < tot)
+        "post-fold probe reads through the epochstore scan", cScans.size == 1)
+      cScans.foreach { s =>
+        val (kept, tot) = s.skippedFilesAudit
+        audits += Audit("q_store_compact",
+          s"re-derived fold stats skipped files ($kept/$tot kept)",
+          tot >= 4 && kept < tot)
+      }
     }
 
     // pruned-size statistics → auto-broadcast (r12): under a threshold
     // the FULL store exceeds, the fr-pruned side must broadcast with NO
     // hint, purely from the scan's post-pruning size report
-    {
+    built("q_store_broadcast") {
       import org.apache.spark.sql.types._
       val lsSchema = StructType(Seq(
         StructField("doc_id", LongType), StructField("n_chars", LongType),
@@ -507,11 +528,13 @@ object PlanAudit {
     // storage-partitioned join (r12): the co-partitioned two-store join
     // + per-lang roll-up must run with ZERO hash exchange (the only
     // allowed exchange is the presentation orderBy's range shuffle)
-    val spjProf = graft.core.Metrics.measure(MiscCatalog.storeSpj(spark, sfDir))
-    audits += Audit("q_store_spj",
-      s"co-partitioned store join shuffles nothing (${spjProf.nHashExchanges} " +
-        "hash exchanges)",
-      spjProf.nHashExchanges == 0)
+    built("q_store_spj") {
+      val spjProf = graft.core.Metrics.measure(MiscCatalog.storeSpj(spark, sfDir))
+      audits += Audit("q_store_spj",
+        s"co-partitioned store join shuffles nothing (${spjProf.nHashExchanges} " +
+          "hash exchanges)",
+        spjProf.nHashExchanges == 0)
+    }
 
     audits.result()
   }

@@ -63,6 +63,12 @@ object GraftBridge {
     }
   }
 
+  /** Generated classes Spark's code generator has compiled in this JVM
+    * so far, over every session: its `private[spark]` compile counter.
+    * A class served from the codegen cache does not count. */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Fresh DataFrame over an existing logical plan — a new QueryExecution
     * with zero-valued SQLMetrics (metrics accumulate per physical plan
     * instance; profilers need a plan that has never executed). */

@@ -172,6 +172,10 @@ class IOSpec extends SparkSpec {
     assert(p.get("err").has("q_broken") && !p.get("queries").has("q_broken"))
     assert(p.get("queries").has("q_ok"))
     assert(p.get("runs").get("q_broken").get(0).isNull)
+    // each run's codegen compile count sits beside its time
+    assert(Seq("q_ok", "q_broken").forall(n =>
+      p.get("compiles").get(n).size == 2 &&
+        p.get("compiles").get(n).get(1).isIntegralNumber))
     assert(math.abs(p.get("value").asDouble -
       p.get("queries").get("q_ok").asDouble) < 1e-9)
     val l = mapper.readTree(line)

@@ -16,4 +16,14 @@ class SessionRecipeSpec extends SparkSpec {
     // overrides other suites left on the shared one
     assert(spark.newSession().conf.get("spark.sql.join.preferSortMergeJoin") == "false")
   }
+
+  test("the shared session and a fresh newSession() share one codegen cache") {
+    // static confs: a session built outside the recipe would silently
+    // keep Spark's 100-entry cache and per-session classloaders
+    // (CodegenReuseSpec measures what that costs)
+    for (s <- Seq(spark, spark.newSession())) {
+      assert(s.conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
+      assert(s.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    }
+  }
 }
