@@ -110,14 +110,34 @@ object Bench {
   /** One query's two timed attempts: `Right(seconds)` per successful
     * run, `Left(message)` per failed one, and per run the number of
     * classes codegen compiled during it (a warm run should compile
-    * none; a recompile regression shows here per query). */
+    * none; a recompile regression shows here per query) and the number
+    * of Spark jobs it launched. */
   final case class QResult(name: String, runs: Seq[Either[String, Double]],
-                           compiles: Seq[Long] = Nil) {
+                           compiles: Seq[Long] = Nil, jobs: Seq[Long] = Nil) {
     def best: Option[Double] = {
       val ok = runs.collect { case Right(t) => t }
       if (ok.isEmpty) None else Some(ok.min)
     }
     def firstErr: Option[String] = runs.collectFirst { case Left(m) => m }
+  }
+
+  /** `body`'s result and the Spark jobs the session's context started
+    * while it ran (jobs other threads start meanwhile count too). The
+    * listener bus is drained before and after, so the count holds
+    * exactly the jobs that started in between. */
+  def jobsDuring[T](spark: SparkSession)(body: => T): (T, Long) = {
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    GraftBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val t = body
+      GraftBridge.drainListenerBus(spark)
+      (t, n.get)
+    } finally spark.sparkContext.removeSparkListener(counter)
   }
 
   /** Time every query twice through the noop sink. Factored out of main
@@ -126,21 +146,23 @@ object Bench {
               queries: Map[String, (SparkSession, String) => DataFrame],
               sfDir: String): Seq[QResult] =
     queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): (Either[String, Double], Long) = {
+      def once(): (Either[String, Double], Long, Long) = {
         val c0 = GraftBridge.codegenCompiles
-        val t0 = System.nanoTime()
-        val run = try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Right((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          System.err.println(s"[bench] $name failed: $msg")
-          Left(msg.linesIterator.take(2).mkString(" | ").take(300))
+        val (run, jobs) = jobsDuring(spark) {
+          val t0 = System.nanoTime()
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            Right((System.nanoTime() - t0) / 1e9)
+          } catch { case e: Throwable =>
+            val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+            System.err.println(s"[bench] $name failed: $msg")
+            Left(msg.linesIterator.take(2).mkString(" | ").take(300))
+          }
         }
-        (run, GraftBridge.codegenCompiles - c0)
+        (run, GraftBridge.codegenCompiles - c0, jobs)
       }
-      val (runs, compiles) = Seq(once(), once()).unzip
-      QResult(name, runs, compiles)
+      val (runs, compiles, jobs) = Seq(once(), once()).unzip3
+      QResult(name, runs, compiles, jobs)
     }
 
   private def r3(d: Double): Double = math.round(d * 1000.0) / 1000.0
@@ -224,8 +246,9 @@ object Bench {
 
   /** (profile JSON, tiny stdout line) for a measurement set. Failed runs
     * render as `null` in "runs"; fully-failed queries move from "queries"
-    * to "err" and contribute nothing to "value". "compiles" holds each
-    * run's codegen compile count, in the order of "runs". */
+    * to "err" and contribute nothing to "value". "compiles" and "jobs"
+    * hold each run's codegen compile count and Spark job count, in the
+    * order of "runs". */
   def render(results: Seq[QResult], sfDir: String,
              profilePath: String,
              telemetry: String = "",
@@ -239,8 +262,8 @@ object Bench {
         q.runs.map { case Right(t) => r3(t).toString; case Left(_) => "null" }
           .mkString(",") + "]"
     }.mkString("{", ",", "}")
-    val compiles = results.map(q => jstr(q.name) + ":" + q.compiles.mkString("[", ",", "]"))
-      .mkString("{", ",", "}")
+    def perRun(f: QResult => Seq[Long]) =
+      results.map(q => jstr(q.name) + ":" + f(q).mkString("[", ",", "]")).mkString("{", ",", "}")
     val err = failed.map(q => jstr(q.name) + ":" + jstr(q.firstErr.getOrElse("")))
       .mkString("{", ",", "}")
     val total = r3(measured.map(_.best.get).sum)
@@ -249,7 +272,7 @@ object Bench {
       s"""{"metric":"total","unit":"sec","sf":${jstr(sfDir)},"n":${results.size},""" +
         telemetry +
         s""""reruns":$rer,""" +
-        s""""errors":${failed.size},"err":$err,"queries":$qs,"runs":$runs,"compiles":$compiles,"value":$total}"""
+        s""""errors":${failed.size},"err":$err,"queries":$qs,"runs":$runs,"compiles":${perRun(_.compiles)},"jobs":${perRun(_.jobs)},"value":$total}"""
     val stdoutLine =
       s"""{"metric":"total","unit":"sec","sf":${jstr(sfDir)},"n":${results.size},""" +
         s""""profile":${jstr(profilePath)},"errors":${failed.size},"queries":{},"value":$total}"""
@@ -308,7 +331,8 @@ object Bench {
           .map(q => q.name -> q).toMap
         results0.map(q => redo.get(q.name).map(r => q.copy(
           runs = q.runs ++ r.runs.take(1),
-          compiles = q.compiles ++ r.compiles.take(1))).getOrElse(q))
+          compiles = q.compiles ++ r.compiles.take(1),
+          jobs = q.jobs ++ r.jobs.take(1))).getOrElse(q))
       }
     val (laEnd, jvmsEnd) = loadTelemetry()
     // self-adjudication: a run whose loadavg exceeds its own CPU budget

@@ -23,7 +23,9 @@ import graft.queries._
   *  - hot paths sit inside WholeStageCodegen spans
   *  - catalog-wide: no trivially-true join equalities, and no inner-join
   *    conjuncts referencing only one side's attributes (both are
-  *    alias-resolution bugs that silently degrade the join)
+  *    alias-resolution bugs that silently degrade the join); each
+  *    query's analyzed plan is built once for both, and a query whose
+  *    builder throws is a failed "plan builds" audit, never skipped
   */
 object PlanAudit {
 
@@ -250,6 +252,13 @@ object PlanAudit {
     check("q_media_dedup_incr", mincr, "new batch broadcast into history scan (no SMJ)",
       p => p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"))
 
+    // every catalog query's analyzed plan, built once for the two
+    // catalog-wide audits below; a builder that throws records a failed
+    // "plan builds" audit instead of dropping out of both
+    val analyzed = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, f) =>
+      built(name)(f(spark, sfDir).queryExecution.analyzed).map(name -> _)
+    }
+
     // every catalog query's ANALYZED plan must be free of trivially-true
     // join equalities (left semantically equal to right): when a self-join
     // condition like q("tbl") === e("tbl") resolves both sides to the SAME
@@ -258,18 +267,16 @@ object PlanAudit {
     // round-5 ANN candidate join lost its table constraint and matched
     // probes against every table's buckets. Analyzed (pre-optimizer) plans
     // still carry the degenerate predicate, so it is detectable here.
-    val trivialEqs = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, f) =>
-      scala.util.Try(f(spark, sfDir)).toOption.toSeq.flatMap { df =>
-        df.queryExecution.analyzed.collect {
-          case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
-            j.condition.toSeq.flatMap(_.collect {
-              case e: org.apache.spark.sql.catalyst.expressions.EqualTo
-                  if e.left.semanticEquals(e.right) => s"$name: ${e.sql}"
-              case e: org.apache.spark.sql.catalyst.expressions.EqualNullSafe
-                  if e.left.semanticEquals(e.right) => s"$name: ${e.sql}"
-            })
-        }.flatten
-      }
+    val trivialEqs = analyzed.flatMap { case (name, p) =>
+      p.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+          j.condition.toSeq.flatMap(_.collect {
+            case e: org.apache.spark.sql.catalyst.expressions.EqualTo
+                if e.left.semanticEquals(e.right) => s"$name: ${e.sql}"
+            case e: org.apache.spark.sql.catalyst.expressions.EqualNullSafe
+                if e.left.semanticEquals(e.right) => s"$name: ${e.sql}"
+          })
+      }.flatten
     }
     audits += Audit("catalog",
       "no trivially-true join equalities (silently dropped predicates)" +
@@ -292,20 +299,18 @@ object PlanAudit {
         conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
     }
-    val oneSided = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, f) =>
-      scala.util.Try(f(spark, sfDir)).toOption.toSeq.flatMap { df =>
-        df.queryExecution.analyzed.collect {
-          case j: org.apache.spark.sql.catalyst.plans.logical.Join
-              if j.joinType == org.apache.spark.sql.catalyst.plans.Inner &&
-                j.condition.isDefined =>
-            conjuncts(j.condition.get).collect {
-              case c if c.references.nonEmpty &&
-                  (c.references.subsetOf(j.left.outputSet) ||
-                    c.references.subsetOf(j.right.outputSet)) =>
-                s"$name: ${c.sql}"
-            }
-        }.flatten
-      }
+    val oneSided = analyzed.flatMap { case (name, p) =>
+      p.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join
+            if j.joinType == org.apache.spark.sql.catalyst.plans.Inner &&
+              j.condition.isDefined =>
+          conjuncts(j.condition.get).collect {
+            case c if c.references.nonEmpty &&
+                (c.references.subsetOf(j.left.outputSet) ||
+                  c.references.subsetOf(j.right.outputSet)) =>
+              s"$name: ${c.sql}"
+          }
+      }.flatten
     }
     audits += Audit("catalog",
       "no one-sided inner-join conjuncts (filters masquerading as join keys)" +
@@ -536,7 +541,9 @@ object PlanAudit {
         spjProf.nHashExchanges == 0)
     }
 
-    audits.result()
+    // a query audited above and again in the catalog pass reports the
+    // same build failure once
+    audits.result().distinct
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,16 +1,58 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver testdata layout (`<sfDir>/<name>.parquet`,
-  * see /root/repo/TESTDATA.md). Plain parquet scans so Catalyst gets full
-  * filter pushdown / column pruning; no caching here — each query owns
-  * its plan.
+  * see TESTDATA.md). Plain parquet scans so Catalyst gets full filter
+  * pushdown / column pruning.
+  *
+  * Each table's schema is inferred once per session. A bare
+  * `spark.read.parquet` infers the schema from the file footers with a
+  * Spark job of its own on every call (75-105 ms warm for `lineitem` at
+  * sf0.01 on a 4-core box, against 5-8 ms for a read given its schema),
+  * and one read query calls these loaders up to 5 times. So `read`
+  * memoizes the inferred `StructType`, keyed on (session id, path,
+  * listing fingerprint: every file's name, length and mtime), and every
+  * read is `spark.read.schema(s).parquet`:
+  *  - a file rewritten in place changes the fingerprint, so its schema
+  *    is inferred again;
+  *  - each session infers its own, because inference reads session confs
+  *    (`events` sets `spark.sql.legacy.parquet.nanosAsLong`).
+  * The memo holds schemas only, never a DataFrame: each call still builds
+  * its own relation with fresh exprIds. A shared DataFrame would give both
+  * sides of a self-join the same attributes and turn `a("k") === b("k")`
+  * trivially true (the catalog audit in `PlanAudit` catches exactly that).
   */
 object Tables {
-  private def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  // ~10 tables per (session, sfDir): 256 entries cover the test suite's
+  // sessions and scale factors with headroom; an evicted schema is just
+  // inferred again
+  private val schemas =
+    new BoundedMemo[(String, String, Seq[(String, Long, Long)]), StructType](256)((_, _) => ())
+
+  private def fingerprint(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val p = new Path(path)
+    val fs = p.getFileSystem(GraftBridge.sessionHadoopConf(spark))
+    // plain listStatus: listFiles' block-location lookup costs ~4 ms a
+    // call on the local filesystem, 200x a listing
+    def files(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(f => if (f.isDirectory) files(f.getPath) else Seq(f))
+    // a missing path keys on Nil: inference then fails with Spark's own
+    // error, and a failed build is retried on the next call
+    try files(p).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1)
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  private def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val schema = schemas.get((GraftBridge.sessionId(spark), path, fingerprint(spark, path))) {
+      spark.read.parquet(path).schema
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(spark: SparkSession, sfDir: String): DataFrame   = read(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame   = read(spark, sfDir, "nation")

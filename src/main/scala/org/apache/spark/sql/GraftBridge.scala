@@ -69,6 +69,17 @@ object GraftBridge {
   def codegenCompiles: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
+  /** Block until the context's listener bus has delivered every event
+    * posted so far, so a listener's counts cover all jobs that already
+    * ran (events reach listeners asynchronously). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The session's own id: distinct for every `newSession()`, and a plain
+    * string, so a memo keyed on it does not keep the session alive. */
+  def sessionId(spark: SparkSession): String =
+    spark.asInstanceOf[classic.SparkSession].sessionUUID
+
   /** Fresh DataFrame over an existing logical plan — a new QueryExecution
     * with zero-valued SQLMetrics (metrics accumulate per physical plan
     * instance; profilers need a plan that has never executed). */

@@ -22,6 +22,41 @@ class GraphSpec extends SparkSpec {
     assert(comp.map(_.getLong(0)).toSeq == Seq(1L))
   }
 
+  private def components(edges: Seq[(Long, Long)], maxIter: Int = 20): Map[Long, Long] =
+    Graph.connectedComponents(edges.toDF("src", "dst"), maxIter)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("components of a diameter-1 graph launch at most 5 Spark jobs") {
+    // the dedup case: near-dup pairs are mostly single edges, so this is
+    // the round count the dedup queries pay (two rounds: one to label,
+    // one to prove nothing changes). Round 1 takes 2 jobs and round 2
+    // takes 3; an eager checkpoint, a join back to the labels or a
+    // two-stage convergence count per round exceeds it
+    val edges = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("src", "dst")
+    val (comp, jobs) = Bench.jobsDuring(spark)(Graph.connectedComponents(edges))
+    assert(jobs <= 5, s"$jobs jobs")
+    assert(comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L, 6L -> 5L))
+  }
+
+  test("duplicate edges, reversed duplicates and self-loops change no label") {
+    val edges = Seq((1L, 2L), (1L, 2L), (2L, 1L), (3L, 3L), (4L, 4L), (4L, 5L),
+      (5L, 5L), (5L, 4L), (6L, 2L), (6L, 6L))
+    assert(components(edges) ==
+      Map(1L -> 1L, 2L -> 1L, 6L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 4L))
+  }
+
+  test("a chain needing exactly maxIter rounds converges; one more vertex fails") {
+    // a path of n vertices needs n rounds: n - 1 to carry the minimum to
+    // the far end, and one that changes nothing
+    val maxIter = 4
+    def chain(n: Int) = (1L until n.toLong).map(i => (i, i + 1))
+    assert(components(chain(maxIter), maxIter) == (1L to maxIter.toLong).map(_ -> 1L).toMap)
+    val e = intercept[IllegalArgumentException](components(chain(maxIter + 1), maxIter))
+    assert(e.getMessage.contains(s"connectedComponents did not converge in $maxIter rounds " +
+      "(1 labels still changing)"), e.getMessage)
+  }
+
   test("dedup clusters keep exactly one representative per component") {
     val pairs = Seq((10L, 20L), (20L, 30L), (40L, 50L)).toDF("d1", "d2")
     val d = Graph.dedupClusters(pairs, "d1", "d2").collect()

@@ -176,6 +176,11 @@ class IOSpec extends SparkSpec {
     assert(Seq("q_ok", "q_broken").forall(n =>
       p.get("compiles").get(n).size == 2 &&
         p.get("compiles").get(n).get(1).isIntegralNumber))
+    // ...and its Spark job count: the healthy query's noop write runs one
+    assert(Seq("q_ok", "q_broken").forall(n =>
+      p.get("jobs").get(n).size == 2 &&
+        p.get("jobs").get(n).get(1).isIntegralNumber))
+    assert(p.get("jobs").get("q_ok").get(1).asLong >= 1)
     assert(math.abs(p.get("value").asDouble -
       p.get("queries").get("q_ok").asDouble) < 1e-9)
     val l = mapper.readTree(line)
