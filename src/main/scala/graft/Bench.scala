@@ -73,6 +73,12 @@ object Bench {
     * difference: PlanAudit turns AQE off on top, because AQE hides
     * codegen markers and join strategies until execution.
     *
+    * Engine install: `spark.sql.extensions=graft.plans.GraftExtensions`
+    * injects the 7 graft SQL functions and the native as-of join's
+    * strategy and rules once, when the session is built; `newSession()`
+    * children and streaming clones inherit them. This is the only way
+    * they reach a session: nothing registers them per call.
+    *
     * Codegen reuse: each generated class compiles once per JVM. Spark
     * keys its compiled-class cache (`CodeGenerator.cache`) on (context
     * classloader, code), and two defaults defeated it. (1) Its 100-entry
@@ -106,6 +112,7 @@ object Bench {
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
 
   /** One query's two timed attempts: `Right(seconds)` per successful
     * run, `Left(message)` per failed one, and per run the number of

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
 
 /** Diagnostic evidence tooling (the PlanDump sibling): run one catalog
   * query through the noop sink with a listener attached and print every
@@ -50,12 +51,13 @@ object JobProfile {
           // time the SECOND run (fixtures landed, JIT warm) — the run
           // whose jobs are the measured lifecycle, not fixture landing
           (1 to 2).foreach { pass =>
+            GraftBridge.drainListenerBus(spark) // earlier passes' late events
             lines.clear()
             val t0 = System.nanoTime()
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             val total = (System.nanoTime() - t0) / 1e9
             println(f"[jobprofile] $name pass $pass  total $total%.3f s")
-            Thread.sleep(300) // let the listener bus drain (async events)
+            GraftBridge.drainListenerBus(spark) // every job-end event of this pass
             lines.toArray(Array.empty[(Int, String)]).sortBy(_._1)
               .foreach(l => println(l._2))
           }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, And, Ascending, Attribute, Expression, GenericInternalRow, JoinedRow,
@@ -78,9 +78,8 @@ case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinPlan]] as [[AsOfJoinExec]]. Injected per-deployment by
-  * [[GraftExtensions]] (`injectPlannerStrategy`) or per-session by
-  * [[AsOfJoin.register]] (`spark.experimental.extraStrategies`). */
+/** Plans [[AsOfJoinPlan]] as [[AsOfJoinExec]]. Injected into every
+  * session by [[GraftExtensions]] (`injectPlannerStrategy`). */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case a: AsOfJoinPlan =>
@@ -99,9 +98,7 @@ object AsOfJoinStrategy extends SparkStrategy {
   * the left scan stage instead. Injected into the operator-optimization
   * batch by [[GraftExtensions]], where it composes with the built-in
   * pushdown rules to carry the predicate all the way into the source scan
-  * (`PushedFilters`); via `spark.experimental.extraOptimizations`
-  * ([[AsOfJoin.register]]) it runs as a late batch — still upstream of
-  * the join's exchange, merely past the scan-pushdown rules. */
+  * (`PushedFilters`). */
 object PushLeftFiltersThroughAsOfJoin extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, a: AsOfJoinPlan) =>
@@ -302,17 +299,6 @@ case class AsOfJoinExec(
 /** DataFrame-level API over the native operator. */
 object AsOfJoin {
 
-  /** Makes the operator plannable in sessions built WITHOUT
-    * `spark.sql.extensions=graft.plans.GraftExtensions`: registers the
-    * strategy and the pushdown rule through `spark.experimental` (both
-    * consulted at every plan, so post-creation registration works).
-    * Idempotent; called automatically by [[asofBackward]]. */
-  def register(spark: SparkSession): Unit = {
-    GraftBridge.addStrategy(spark, AsOfJoinStrategy)
-    GraftBridge.addOptimization(spark, PushLeftFiltersThroughAsOfJoin)
-    GraftBridge.addOptimization(spark, PruneAsOfJoinColumns)
-  }
-
   /** Backward as-of join of `left` to `right` on equal `on` columns with
     * `right.rightTsCol <= left.leftTsCol`, keeping the right row with the
     * greatest (ts, tieBreaks...). Output: all left columns, then the
@@ -323,9 +309,11 @@ object AsOfJoin {
     * carries ambiguous duplicate names.
     * The right side is re-aliased with fresh expression ids, so
     * self-as-of (both sides carved from the same source) is legal.
-    * Column pruning composes via [[PruneAsOfJoinColumns]] (installed by
-    * [[register]]/[[GraftExtensions]]), so unreferenced child columns
-    * narrow down to the source scans — no manual pre-select needed.
+    * The session must carry [[GraftExtensions]] (the session recipe sets
+    * it), which plans the node and installs its pushdown and pruning
+    * rules: column pruning composes via [[PruneAsOfJoinColumns]], so
+    * unreferenced child columns narrow down to the source scans — no
+    * manual pre-select needed.
     * Float/double KEY columns are rejected: the custom node bypasses
     * Catalyst's NormalizeFloatingNumbers, so -0.0/0.0 and NaN-payload
     * variants would hash to different partitions and silently miss
@@ -338,8 +326,6 @@ object AsOfJoin {
       rightTieBreaks: Seq[String] = Nil,
       outer: Boolean = false): DataFrame = {
     require(on.nonEmpty, "as-of join requires at least one key column")
-    val spark = left.sparkSession
-    register(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan0 = right.queryExecution.analyzed
     // resolve like the rest of the session: case-insensitively unless
@@ -393,6 +379,6 @@ object AsOfJoin {
       taken += n
       if (n == a.name) a else Alias(a, n)()
     }
-    GraftBridge.ofRows(spark, Project(outCols, node))
+    GraftBridge.ofRows(left.sparkSession, Project(outCols, node))
   }
 }

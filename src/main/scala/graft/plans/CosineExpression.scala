@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 import org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** Codegen'd fused cosine similarity over two `array<float>` columns.
@@ -83,67 +83,50 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Column-API handle. */
+  /** Column-API handle; SQL `cosine_sim(a, b)` comes from
+    * [[GraftExtensions]]. */
   def cosineSim(a: Column, b: Column): Column =
     GraftBridge.column(CosineSimilarity(
       GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** SQL registration: `SELECT cosine_sim(a, b)`. Call per-session or via
-    * [[GraftExtensions]] in `spark.sql.extensions`. */
-  def register(spark: SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "cosine_sim",
-      children => CosineSimilarity(children(0), children(1)))
 }
 
-/** `--conf spark.sql.extensions=graft.plans.GraftExtensions` injects the
-  * engine's custom expressions into every session of a deployment:
-  * `cosine_sim(a, b)` (codegen'd fused cosine), `top_k(ord, id, k)`
-  * (bounded-heap grouped top-k aggregate),
-  * `reservoir_sample(x, k[, seed])` (bounded uniform group sample),
-  * `heavy_hitters(item, m)` (SpaceSaving frequent items),
-  * `count_min(item, depth, width)` (Count-Min frequency sketch),
-  * `hll_registers(item, p)` (HyperLogLog, oracle-checkable registers),
-  * and `kmv_sketch(item, k)` (KMV k-minimum set-operation sketch);
-  * plus the plan-level operator stack: [[AsOfJoinStrategy]] (native
-  * sort-merge as-of join) and [[PushLeftFiltersThroughAsOfJoin]]
-  * (operator-batch predicate pushdown through the custom node, composing
-  * with Catalyst's own rules down to the source scan). */
+/** The engine's Catalyst surface, installed once per session through
+  * `spark.sql.extensions=graft.plans.GraftExtensions`. The session recipe
+  * (`graft.Bench.sessionBuilder`) sets it, so every session the project
+  * builds carries it, and so do their `newSession()` children and
+  * streaming clones; a deployment building its own session sets the same
+  * conf. It injects:
+  *  - 7 SQL functions: `cosine_sim(a, b)` (codegen'd fused cosine),
+  *    `top_k(ord, id, k)` (bounded-heap grouped top-k aggregate),
+  *    `reservoir_sample(x, k[, seed])` (bounded uniform group sample),
+  *    `heavy_hitters(item, m)` (SpaceSaving frequent items),
+  *    `count_min(item, depth, width)` (Count-Min frequency sketch),
+  *    `hll_registers(item, p)` (HyperLogLog, oracle-checkable registers)
+  *    and `kmv_sketch(item, k)` (KMV k-minimum set-operation sketch);
+  *  - the as-of join's planner strategy [[AsOfJoinStrategy]], and its two
+  *    rules [[PushLeftFiltersThroughAsOfJoin]] and [[PruneAsOfJoinColumns]]
+  *    in the operator-optimization batch, where they compose with
+  *    Catalyst's own pushdown and pruning down to the source scan.
+  * The materialized-view and join-advisor rules are not here: they are
+  * written for the late batch and are armed per session by
+  * `MaterializedAgg.register` / `JoinAdvisor.arm`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => PushLeftFiltersThroughAsOfJoin)
     ext.injectOptimizerRule(_ => PruneAsOfJoinColumns)
-    // no-ops until a view / join profile is registered (registries start
-    // empty)
-    ext.injectOptimizerRule(_ => MaterializedAgg.RewriteToMaterializedAgg)
-    ext.injectOptimizerRule(_ => graft.core.JoinAdvisor.AdvisedJoinRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("top_k"),
-      new ExpressionInfo(classOf[TopKAgg].getName, "top_k"),
-      (children: Seq[Expression]) => TopKAgg.fromSql(children)))
-    ext.injectFunction((
-      FunctionIdentifier("reservoir_sample"),
-      new ExpressionInfo(classOf[ReservoirSampleAgg].getName, "reservoir_sample"),
-      (children: Seq[Expression]) => ReservoirSampleAgg.fromSql(children)))
-    ext.injectFunction((
-      FunctionIdentifier("heavy_hitters"),
-      new ExpressionInfo(classOf[HeavyHittersAgg].getName, "heavy_hitters"),
-      (children: Seq[Expression]) => HeavyHittersAgg.fromSql(children)))
-    ext.injectFunction((
-      FunctionIdentifier("count_min"),
-      new ExpressionInfo(classOf[CountMinAgg].getName, "count_min"),
-      (children: Seq[Expression]) => CountMinAgg.fromSql(children)))
-    ext.injectFunction((
-      FunctionIdentifier("hll_registers"),
-      new ExpressionInfo(classOf[HllRegistersAgg].getName, "hll_registers"),
-      (children: Seq[Expression]) => HllRegistersAgg.fromSql(children)))
-    ext.injectFunction((
-      FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketchAgg].getName, "kmv_sketch"),
-      (children: Seq[Expression]) => KmvSketchAgg.fromSql(children)))
+    Seq[(String, Class[_], Seq[Expression] => Expression)](
+      ("cosine_sim", classOf[CosineSimilarity],
+        children => CosineSimilarity(children(0), children(1))),
+      ("top_k", classOf[TopKAgg], TopKAgg.fromSql),
+      ("reservoir_sample", classOf[ReservoirSampleAgg], ReservoirSampleAgg.fromSql),
+      ("heavy_hitters", classOf[HeavyHittersAgg], HeavyHittersAgg.fromSql),
+      ("count_min", classOf[CountMinAgg], CountMinAgg.fromSql),
+      ("hll_registers", classOf[HllRegistersAgg], HllRegistersAgg.fromSql),
+      ("kmv_sketch", classOf[KmvSketchAgg], KmvSketchAgg.fromSql)
+    ).foreach { case (name, cls, builder) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
   }
 }

@@ -163,8 +163,4 @@ object CountMinAgg {
     require(depth > 0 && width > 0, s"count_min: geometry must be positive, got ($depth, $width)")
     CountMinAgg(children(0), depth, width).toAggregateExpression()
   }
-
-  /** Per-session SQL registration: `SELECT count_min(k, 4, 64)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.GraftBridge.registerFunction(spark, "count_min", fromSql)
 }

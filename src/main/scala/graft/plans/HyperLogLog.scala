@@ -130,8 +130,4 @@ object HllRegistersAgg {
     require(p >= 2 && p <= 16, s"hll_registers: p must be in [2, 16], got $p")
     HllRegistersAgg(children(0), p).toAggregateExpression()
   }
-
-  /** Per-session SQL registration: `SELECT hll_registers(k, 6)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.GraftBridge.registerFunction(spark, "hll_registers", fromSql)
 }

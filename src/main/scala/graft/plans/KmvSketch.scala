@@ -153,8 +153,4 @@ object KmvSketchAgg {
     require(k > 0, s"kmv_sketch: k must be positive, got $k")
     KmvSketchAgg(children(0), k).toAggregateExpression()
   }
-
-  /** Per-session SQL registration: `SELECT kmv_sketch(x, 32)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.GraftBridge.registerFunction(spark, "kmv_sketch", fromSql)
 }

@@ -171,9 +171,4 @@ object ReservoirSampleAgg {
       else 42L
     ReservoirSampleAgg(children(0), k, seed).toAggregateExpression()
   }
-
-  /** Per-session SQL registration: `SELECT reservoir_sample(x, 10)`.
-    * Deployments should prefer `spark.sql.extensions=GraftExtensions`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "reservoir_sample", fromSql)
 }

@@ -166,9 +166,4 @@ object HeavyHittersAgg {
     require(m > 0, s"heavy_hitters: m must be positive, got $m")
     HeavyHittersAgg(children(0), m).toAggregateExpression()
   }
-
-  /** Per-session SQL registration: `SELECT heavy_hitters(word, 32)`.
-    * Deployments should prefer `spark.sql.extensions=graft.plans.GraftExtensions`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.GraftBridge.registerFunction(spark, "heavy_hitters", fromSql)
 }

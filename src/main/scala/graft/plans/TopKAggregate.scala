@@ -194,9 +194,4 @@ object TopKAgg {
     require(k > 0, s"top_k: k must be positive, got $k")
     TopKAgg(children(0), children(1), k).toAggregateExpression()
   }
-
-  /** Per-session SQL registration: `SELECT top_k(price, id, 3)`. Deployments
-    * should prefer `spark.sql.extensions=graft.plans.GraftExtensions`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.GraftBridge.registerFunction(spark, "top_k", fromSql)
 }

@@ -396,16 +396,14 @@ object TpchCatalog {
   private val HllP = 6
 
   /** [[hllRegistersQ]] driven entirely through the SQL surface
-    * (`q_hll_sql`): the session-registered `hll_registers` function
-    * ([[graft.plans.HllRegistersAgg.register]] — the same builder
-    * `GraftExtensions` injects for `spark.sql.extensions` deployments)
+    * (`q_hll_sql`): the `hll_registers` function that
+    * [[graft.plans.GraftExtensions]] injects into every recipe session,
     * called from `spark.sql` over a temp view, with the generator
     * explode also in SQL. Shares [[hllRegistersSql]]'s oracle — a
     * SQL-path registration that mangled arguments, lost the aggregate's
     * partial merge, or mis-bound the function would diverge from the
     * DataFrame twin's oracle-checked registers. */
   def hllRegistersSqlQ(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.HllRegistersAgg.register(spark)
     Tables.lineitem(spark, sfDir).createOrReplaceTempView("graft_li_sqlv")
     spark.sql(
       s"""SELECT CAST(bucket AS BIGINT) AS bucket, rank
@@ -607,7 +605,7 @@ object TpchCatalog {
       |GROUP BY l_returnflag
       |ORDER BY est DESC, item ASC""".stripMargin
 
-  /** `approx_top_k`-style SQL surface (`q_topk_sql`): the registered
+  /** `approx_top_k`-style SQL surface (`q_topk_sql`): the injected
     * `heavy_hitters` aggregate driven entirely through `spark.sql`,
     * explode + ORDER BY est + LIMIT k in SQL — the one-call "top k
     * frequent items" a dashboard issues. m = 16 exceeds l_returnflag's
@@ -616,7 +614,6 @@ object TpchCatalog {
     * (tie-broken identically); the SpaceSaving eviction/merge bounds
     * beyond that regime stay pinned by SpaceSavingSpec. */
   def topkSqlQ(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.HeavyHittersAgg.register(spark)
     Tables.lineitem(spark, sfDir).createOrReplaceTempView("graft_li_topkv")
     spark.sql(
       """SELECT h.item AS item, h.est AS est

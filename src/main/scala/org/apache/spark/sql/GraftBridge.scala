@@ -1,57 +1,27 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into `private[sql]` surface needed to ship custom Catalyst
   * expressions from an external library — the standard shim pattern used
   * by Spark-extension libraries (a single object placed in the
   * org.apache.spark.sql package; everything else in this repo lives under
-  * `graft.*`). Kept to the minimum: Column↔Expression conversion and
-  * per-session function registration (deployments should prefer
-  * `spark.sql.extensions=graft.plans.GraftExtensions`, which is fully
-  * public API).
+  * `graft.*`). Kept to the minimum: Column↔Expression conversion and the
+  * session internals the engine reads. The engine's functions, as-of
+  * strategy and rules reach a session only through
+  * `spark.sql.extensions=graft.plans.GraftExtensions`, which is public
+  * API and set by the session recipe.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Per-session SQL function registration (idempotent): a name the
-    * session already has — from an earlier call or from
-    * [[graft.plans.GraftExtensions]] — is kept. Every graft name has
-    * exactly one builder, so a re-registration would only replace it
-    * with itself (and log a "replaced a previously registered
-    * function" warning per query). */
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit = {
-    val reg = spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    reg.synchronized {
-      if (!reg.functionExists(id))
-        reg.registerFunction(id, new ExpressionInfo("graft.plans", name), builder)
-    }
-  }
-
-  /** Per-session planner-strategy registration (idempotent) — the
-    * post-creation path for sessions built without
-    * `spark.sql.extensions=graft.plans.GraftExtensions`;
-    * `experimental.extraStrategies` is consulted at every plan. */
-  def addStrategy(spark: SparkSession,
-                  strategy: execution.SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    exp.synchronized {
-      if (!exp.extraStrategies.contains(strategy))
-        exp.extraStrategies = exp.extraStrategies :+ strategy
-    }
-  }
-
-  /** Per-session optimizer-rule registration (idempotent). Experimental
-    * rules run as a LATE fixed-point batch, after the standard operator
-    * optimization — a pushed predicate lands upstream of the custom node
-    * but past the scan-pushdown rules; the `spark.sql.extensions` path
-    * (`injectOptimizerRule`) instead joins the operator batch and
-    * composes with built-in pushdown. */
+  /** Per-session optimizer-rule registration (idempotent), for the rules
+    * that arm only once a session registers something for them (the
+    * materialized-view and join-advisor rewrites). Experimental rules run
+    * as a LATE fixed-point batch, after the standard operator
+    * optimization, so they see the canonical optimized plan shape. */
   def addOptimization(
       spark: SparkSession,
       rule: org.apache.spark.sql.catalyst.rules.Rule[

@@ -36,6 +36,16 @@ class AsOfJoinSpec extends SparkSpec {
     (left, right)
   }
 
+  // the planted left side read back from parquet: a filter pushed onto an
+  // in-memory relation is folded into it by ConvertToLocalRelation, which
+  // would hide where the pushdown rule put it; on a file scan it stays a
+  // Filter in the optimized plan and lands in the scan's PushedFilters
+  private lazy val plantedLeftParquet: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_asof_left").toString
+    planted._1.write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
   // expected backward matches for the planted corpus (hand-derived)
   private val expectedInner = Set(
     (1001L, 12L),  // ts<=100: {40→11, 100→12} → max(ts,rid) = (100,12)
@@ -167,13 +177,13 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("pushdown rule: left-only filters move below the as-of node") {
-    val (l, r) = planted
-    val df = AsOfJoin.asofBackward(l, r, Seq("k"), "ts", "ts")
+    val r = planted._2
+    val df = AsOfJoin.asofBackward(plantedLeftParquet, r, Seq("k"), "ts", "ts")
       .filter(col("lid") > 2000L)
     val optimized = df.queryExecution.optimizedPlan
     // the surviving tree must not keep a Filter ABOVE the custom node —
-    // the rule (registered via experimental.extraOptimizations here)
-    // relocates it into the left child
+    // the rule (injected into the operator-optimization batch by the
+    // recipe's GraftExtensions) relocates it into the left child
     val asof = optimized.collect { case a: AsOfJoinPlan => a }
     assert(asof.nonEmpty, "as-of node missing from optimized plan")
     val filterAbove = optimized.collect {
@@ -184,6 +194,11 @@ class AsOfJoinSpec extends SparkSpec {
     assert(asof.head.left.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f }.nonEmpty,
       s"pushed filter not found in left subtree:\n$optimized")
+    // in the operator batch the rule composes with Catalyst's own
+    // pushdown, so the bound reaches the left parquet scan
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("GreaterThan(lid,2000)"),
+      s"left filter did not reach the scan's PushedFilters:\n$plan")
     // lids > 2000 with an inner match: 2001 (tie→rid 22) and 7001 (→72)
     assert(df.select(col("lid")).collect().map(_.getLong(0)).toSet == Set(2001L, 7001L))
   }
@@ -223,53 +238,40 @@ class AsOfJoinSpec extends SparkSpec {
 
   test("extension session: strategy + rule injected via spark.sql.extensions, " +
        "filter reaches the parquet scan") {
-    import org.apache.spark.sql.SparkSession
-    val prior = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      val e = graft.core.Tables.events(s2, sf0001)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("p_id"), col("ts").as("p_ts"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("c_id"), col("ts").as("c_ts"))
-      val df = AsOfJoin.asofBackward(purchases, clicks, Seq("user_id"),
-          "p_ts", "c_ts", rightTieBreaks = Seq("c_id"))
-        .filter(col("p_id") > 100L)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("AsOfJoin"), "native exec not planned in extension session")
-      // in the operator batch the rule composes with Catalyst's scan
-      // pushdown: the p_id (= event_id) bound must appear in PushedFilters
-      // plan strings elide long PushedFilters lists, so match the prefix;
-      // DataFilters shows the full pushed predicate `(event_id#.. > 100)`
-      assert(plan.contains("GreaterThan(event_id,1") && plan.contains("> 100)"),
-        s"filter did not reach the scan:\n$plan")
-      assert(df.count() > 0)
+    // the shared session is built by the recipe, which sets
+    // spark.sql.extensions=graft.plans.GraftExtensions
+    val e = graft.core.Tables.events(spark, sf0001)
+    val purchases = e.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id").as("p_id"), col("ts").as("p_ts"))
+    val clicks = e.filter(col("event_type") === "click")
+      .select(col("user_id"), col("event_id").as("c_id"), col("ts").as("c_ts"))
+    val df = AsOfJoin.asofBackward(purchases, clicks, Seq("user_id"),
+        "p_ts", "c_ts", rightTieBreaks = Seq("c_id"))
+      .filter(col("p_id") > 100L)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("AsOfJoin"), "native exec not planned")
+    // in the operator batch the rule composes with Catalyst's scan
+    // pushdown: the p_id (= event_id) bound must appear in PushedFilters
+    // plan strings elide long PushedFilters lists, so match the prefix;
+    // DataFilters shows the full pushed predicate `(event_id#.. > 100)`
+    assert(plan.contains("GreaterThan(event_id,1") && plan.contains("> 100)"),
+      s"filter did not reach the scan:\n$plan")
+    assert(df.count() > 0)
 
-      // column pruning through the node: drag a WIDE right side in, select
-      // almost nothing — PruneAsOfJoinColumns (operator batch) must narrow
-      // the right child so `props`/`value` never reach the scan's ReadSchema
-      val wideClicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("c_id"),
-          col("ts").as("c_ts"), col("value"), col("props"))
-      val slim = AsOfJoin.asofBackward(purchases, wideClicks, Seq("user_id"),
-          "p_ts", "c_ts", rightTieBreaks = Seq("c_id"))
-        .select(col("p_id"), col("c_id"))
-      val slimPlan = slim.queryExecution.executedPlan.toString
-      assert(slimPlan.contains("AsOfJoin"))
-      assert(!slimPlan.contains("props"),
-        s"unused right column reached the physical plan:\n$slimPlan")
-      assert(slim.count() > 0)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setActiveSession(prior)
-      SparkSession.setDefaultSession(prior)
-    }
+    // column pruning through the node: drag a WIDE right side in, select
+    // almost nothing — PruneAsOfJoinColumns (operator batch) must narrow
+    // the right child so `props`/`value` never reach the scan's ReadSchema
+    val wideClicks = e.filter(col("event_type") === "click")
+      .select(col("user_id"), col("event_id").as("c_id"),
+        col("ts").as("c_ts"), col("value"), col("props"))
+    val slim = AsOfJoin.asofBackward(purchases, wideClicks, Seq("user_id"),
+        "p_ts", "c_ts", rightTieBreaks = Seq("c_id"))
+      .select(col("p_id"), col("c_id"))
+    val slimPlan = slim.queryExecution.executedPlan.toString
+    assert(slimPlan.contains("AsOfJoin"))
+    assert(!slimPlan.contains("props"),
+      s"unused right column reached the physical plan:\n$slimPlan")
+    assert(slim.count() > 0)
   }
 
   test("colliding right columns come back suffixed _r, never duplicated") {
@@ -304,7 +306,7 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("pushdown stops at a nondeterministic conjunct (span, not partition)") {
-    val (l, r) = planted
+    val (l, r) = (plantedLeftParquet, planted._2)
     // an always-true but NONDETERMINISTIC predicate (a nondeterministic
     // UDF — rand() < 2.0 won't do: Spark folds out-of-range rand
     // comparisons to true); the deterministic conjunct BEHIND it must
@@ -315,8 +317,14 @@ class AsOfJoinSpec extends SparkSpec {
     val optimized = df.queryExecution.optimizedPlan
     val asof = optimized.collect { case a: AsOfJoinPlan => a }
     assert(asof.nonEmpty)
+    // Catalyst infers isnotnull(lid) from `lid > 2000` and puts it first,
+    // so that null check may legally sit below; the `lid > 2000` conjunct
+    // itself must stay above the join
     assert(asof.head.left.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f }.isEmpty,
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.collect {
+          case g: org.apache.spark.sql.catalyst.expressions.GreaterThan => g }
+    }.flatten.isEmpty,
       s"conjunct pushed past a nondeterministic predicate:\n$optimized")
     assert(df.select(col("lid")).collect().map(_.getLong(0)).toSet == Set(2001L, 7001L))
   }

@@ -61,7 +61,6 @@ class CosineExprSpec extends SparkSpec {
   }
 
   test("SQL registration works: SELECT cosine_sim(a, b)") {
-    CosineSimilarity.register(spark)
     Seq((Seq(1f, 0f), Seq(1f, 0f))).toDF("a", "b").createOrReplaceTempView("v_cos")
     val r = spark.sql("SELECT cosine_sim(a, b) AS c FROM v_cos").head.getDouble(0)
     assert(r == 1.0)

@@ -99,7 +99,6 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("SQL registration: count_min(item, depth, width) plans and matches the column form") {
-    CountMinAgg.register(spark)
     items.toDF("item").createOrReplaceTempView("cms_in")
     val viaSql = spark.sql("SELECT count_min(item, 4, 32) AS sk FROM cms_in")
       .head.getSeq[Long](0).toArray

@@ -46,7 +46,6 @@ class HllSpec extends SparkSpec {
   }
 
   test("SQL registration: hll_registers(k, p) matches the column form") {
-    HllRegistersAgg.register(spark)
     val items = (0 until 800).map(i => s"q$i")
     items.toDF("k").createOrReplaceTempView("hll_in")
     val viaSql = spark.sql("SELECT hll_registers(k, 6) AS regs FROM hll_in")

@@ -47,7 +47,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("SQL registration: kmv_sketch(x, k) matches the column form") {
-    KmvSketchAgg.register(spark)
     val items = (0 until 500).map(i => s"r$i")
     items.toDF("x").createOrReplaceTempView("kmv_in")
     val viaSql = spark.sql("SELECT kmv_sketch(x, 32) AS mins FROM kmv_in")

@@ -53,8 +53,7 @@ class SpaceSavingSpec extends SparkSpec {
     assert(math.abs(s("hot2")._1 - 3000L) <= n / m)
   }
 
-  test("SQL surface: heavy_hitters registered per session") {
-    HeavyHittersAgg.register(spark)
+  test("SQL surface: heavy_hitters injected into the session") {
     Seq("x", "x", "y").toDF("v").createOrReplaceTempView("hh_in")
     val rows = spark.sql(
       "SELECT h.item, h.est FROM (SELECT explode(heavy_hitters(v, 4)) AS h FROM hh_in)")
@@ -63,7 +62,6 @@ class SpaceSavingSpec extends SparkSpec {
   }
 
   test("heavy_hitters rejects a non-literal counter budget") {
-    HeavyHittersAgg.register(spark)
     Seq("x").toDF("v").createOrReplaceTempView("hh_bad")
     val ex = intercept[Exception] {
       spark.sql("SELECT heavy_hitters(v, length(v)) FROM hh_bad").collect()

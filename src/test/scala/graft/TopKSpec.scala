@@ -86,9 +86,8 @@ class TopKSpec extends SparkSpec {
     assert(h.nonEmpty && h == w)
   }
 
-  test("SQL path: top_k registered per-session matches the Column API") {
+  test("SQL path: injected top_k matches the Column API") {
     import spark.implicits._
-    TopKAgg.register(spark)
     graft.core.Tables.lineitem(spark, sf0001).createOrReplaceTempView("topk_li_sql")
     val sql = spark.sql(
       """SELECT l_returnflag,
@@ -135,36 +134,23 @@ class TopKSpec extends SparkSpec {
   }
 
   test("SQL path: GraftExtensions injects top_k and cosine_sim into a fresh session") {
-    import org.apache.spark.sql.SparkSession
-    // builder.getOrCreate() would hand back the shared session (extensions
-    // ignored); clearing the active/default slots forces a NEW session on
-    // the same SparkContext, constructed WITH the extensions — exactly the
-    // spark.sql.extensions deployment path.
-    val prior = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      val cos = s2.sql(
-        "SELECT cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
-          "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c").head().getDouble(0)
-      assert(math.abs(cos - 1.0) < 1e-12)
-      val tk = s2.sql(
-        """SELECT top_k(o, i, 2) AS tk FROM VALUES
-          |  (1.0D, 1L), (9.0D, 2L), (5.0D, 3L) AS t(o, i)""".stripMargin)
-        .head().getSeq[org.apache.spark.sql.Row](0)
-      assert(tk.map(r => (r.getDouble(0), r.getLong(1))) == Seq((9.0, 2L), (5.0, 3L)))
-      val rs = s2.sql(
-        "SELECT reservoir_sample(x, 2) AS s FROM VALUES (1L), (2L), (3L) AS t(x)")
-        .head().getSeq[Long](0)
-      assert(rs.length == 2 && rs.distinct.length == 2 &&
-        rs.forall(Set(1L, 2L, 3L)), s"bad sample $rs")
-    } finally {
-      SparkSession.setActiveSession(prior)
-      SparkSession.setDefaultSession(prior)
-    }
+    // a child session gets a fresh function registry, rebuilt from the
+    // recipe's spark.sql.extensions: nothing registered on the shared
+    // session can leak into it
+    val s2 = spark.newSession()
+    val cos = s2.sql(
+      "SELECT cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
+        "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c").head().getDouble(0)
+    assert(math.abs(cos - 1.0) < 1e-12)
+    val tk = s2.sql(
+      """SELECT top_k(o, i, 2) AS tk FROM VALUES
+        |  (1.0D, 1L), (9.0D, 2L), (5.0D, 3L) AS t(o, i)""".stripMargin)
+      .head().getSeq[org.apache.spark.sql.Row](0)
+    assert(tk.map(r => (r.getDouble(0), r.getLong(1))) == Seq((9.0, 2L), (5.0, 3L)))
+    val rs = s2.sql(
+      "SELECT reservoir_sample(x, 2) AS s FROM VALUES (1L), (2L), (3L) AS t(x)")
+      .head().getSeq[Long](0)
+    assert(rs.length == 2 && rs.distinct.length == 2 &&
+      rs.forall(Set(1L, 2L, 3L)), s"bad sample $rs")
   }
 }

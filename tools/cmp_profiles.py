@@ -4,7 +4,9 @@
 Usage: cmp_profiles.py A.json B.json [threshold]
 
 Prints total, geomean speedup A->B, and per-query deltas beyond the
-threshold (default 10%), sorted by absolute seconds delta.
+threshold (default 10%), sorted by absolute seconds delta. When both
+profiles carry the per-run Spark job counts (`"jobs"`), it then prints
+every common query whose first-run job count changed.
 """
 import json
 import math
@@ -34,6 +36,21 @@ def main() -> None:
     rows.sort()
     for d, q in rows:
         print(f"{'+' if d > 0 else ''}{d:7.3f}s  {qa[q]:7.3f} -> {qb[q]:7.3f}  {q}")
+    print_job_changes(a, b, common)
+
+
+def print_job_changes(a: dict, b: dict, common: list) -> None:
+    """Per-query change in Spark jobs launched by each query's first run."""
+    if "jobs" not in a or "jobs" not in b:
+        print("jobs: n/a (a profile predates the \"jobs\" field)")
+        return
+    ja, jb = a["jobs"], b["jobs"]
+    rows = [(jb[q][0] - ja[q][0], q) for q in common
+            if ja.get(q) and jb.get(q)]
+    changed = sorted(r for r in rows if r[0] != 0)
+    print(f"jobs (first run): {len(changed)} of {len(rows)} queries changed")
+    for d, q in changed:
+        print(f"{d:+5d} jobs  {ja[q][0]:4d} -> {jb[q][0]:4d}  {q}")
 
 
 if __name__ == "__main__":
