@@ -1,14 +1,23 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import graft.core.Metrics
 
 /** Benchmark main (driver contract): run every catalog query at the
   * SPARK_GRAFT_SF_DIR scale factor and print ONE JSON line.
   *
-  * Each query is fully materialized through the `noop` sink — `count()`
-  * would let Catalyst prune projections and undercount the real work.
-  * AQE is on (adaptive shuffle coalescing / broadcast demotion / skew
-  * splitting), matching the 100 TB deployment posture.
+  * `measure` is the one code path that runs catalog queries for
+  * measurement; ScaleProfile renders SCALE.md from its results. Each run
+  * executes the query's whole physical plan through
+  * [[graft.core.Metrics.measure]], discarding the rows (`count()` would
+  * let Catalyst prune projections and undercount the real work), under
+  * one job listener (`jobsDuring`). So one run gives its wall time, its
+  * codegen compile count, each Spark job's seconds and call site, and
+  * its IO/shuffle profile. AQE is on (adaptive shuffle coalescing /
+  * broadcast demotion / skew splitting), matching the 100 TB deployment
+  * posture.
   *
   * Each query runs TWICE and reports the MIN of the two runs: two
   * previous official rounds each charged ~30 s to a query whose plan
@@ -25,7 +34,7 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * successful run is dropped from "queries" and the total and listed
   * under "err" (query -> message), and the stdout line carries an
   * "errors" count so a non-zero is visible even in the tiny summary.
-  * BenchSpec proves the path with a deliberately-broken query.
+  * IOSpec proves the path with a deliberately-broken query.
   *
   * Output-line layout is capture-aware: times round to 3 decimals and the
   * headline "value" (total) prints LAST — the driver's capture window
@@ -39,7 +48,10 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * ($SPARK_GRAFT_BENCH_PROFILE, default bench_profile_<Round>.json).
   *
   * Micro-mode: pass query names as argv to time only those — one-command
-  * anomaly adjudication (`runMain graft.Bench q_listing_normalize`).
+  * anomaly adjudication (`runMain graft.Bench q_listing_normalize`). Its
+  * profile's "job_s" lists each run's jobs with their seconds and call
+  * sites: the per-phase breakdown of a multi-job lifecycle query (fixture
+  * clone vs DML writes vs manifest procedures vs the final read).
   *
   * NOISE TRIAGE (read before calling a delta a regression): even with
   * min-of-2, per-query times at these magnitudes (0.1–3 s on a shared
@@ -64,7 +76,7 @@ object Bench {
     * way: master + shuffle partitions from $SPARK_GRAFT_CPUS, AQE
     * with runtime SHJ conversion, SHJ preference (A/B'd in
     * OPTIMIZATION_r19.md), committer v2 without `_SUCCESS` markers.
-    * Bench, Verify, PlanDump, JobProfile, ScaleProfile, streaming.Demo,
+    * Bench, Verify, PlanDump, ScaleProfile, streaming.Demo,
     * the perfbench harness and the test suite's shared session
     * (`SparkSpec.session`) all build from it, so the oracle gate, the
     * tests, the plan dumps and the scale profile see exactly the
@@ -102,8 +114,8 @@ object Bench {
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // store lifecycles are commit-bound (JobProfile r19: 14-18 jobs of
-      // 30-300 ms per DML run, ~40% of wall in driver-side gaps between
+      // store lifecycles are commit-bound (r19 per-job profile: 14-18 jobs
+      // of 30-300 ms per DML run, ~40% of wall in driver-side gaps between
       // them): drop the per-write _SUCCESS marker and the two-phase
       // v1 rename — standard parquet-sink tuning (guide §6); manifest
       // commits are the store's own atomicity, the committer's marker
@@ -114,52 +126,69 @@ object Bench {
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
 
-  /** One query's two timed attempts: `Right(seconds)` per successful
-    * run, `Left(message)` per failed one, and per run the number of
-    * classes codegen compiled during it (a warm run should compile
-    * none; a recompile regression shows here per query) and the number
-    * of Spark jobs it launched. */
+  /** One query's timed attempts: `Right(seconds)` per successful run,
+    * `Left(message)` per failed one. Per run, in the same order: the
+    * number of classes codegen compiled during it (a warm run should
+    * compile none; a recompile regression shows here per query), the
+    * Spark jobs it launched (seconds and call site each, see
+    * `jobsDuring`) and its IO/shuffle profile (`None` for a failed run). */
   final case class QResult(name: String, runs: Seq[Either[String, Double]],
-                           compiles: Seq[Long] = Nil, jobs: Seq[Long] = Nil) {
-    def best: Option[Double] = {
-      val ok = runs.collect { case Right(t) => t }
-      if (ok.isEmpty) None else Some(ok.min)
-    }
+                           compiles: Seq[Long] = Nil,
+                           jobs: Seq[Seq[(Double, String)]] = Nil,
+                           io: Seq[Option[Metrics.Profile]] = Nil) {
+    /** (seconds, run index) of the fastest successful run. */
+    def bestRun: Option[(Double, Int)] =
+      runs.zipWithIndex.collect { case (Right(t), i) => (t, i) }.minByOption(_._1)
+    def best: Option[Double] = bestRun.map(_._1)
     def firstErr: Option[String] = runs.collectFirst { case Left(m) => m }
   }
 
   /** `body`'s result and the Spark jobs the session's context started
-    * while it ran (jobs other threads start meanwhile count too). The
-    * listener bus is drained before and after, so the count holds
-    * exactly the jobs that started in between. */
-  def jobsDuring[T](spark: SparkSession)(body: => T): (T, Long) = {
-    val n = new java.util.concurrent.atomic.AtomicLong
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet(): Unit
+    * while it ran (jobs other threads start meanwhile count too), in
+    * job-id order: each job's wall seconds and short call site (the
+    * `callSite.short` property, else its last stage's name). The
+    * listener bus is drained before and after, so the list holds
+    * exactly the jobs that started in between; a job still running
+    * then is timed up to that point. */
+  def jobsDuring[T](spark: SparkSession)(body: => T): (T, Seq[(Double, String)]) = {
+    val starts = TrieMap.empty[Int, (String, Long)]
+    val ends = TrieMap.empty[Int, Long]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val site = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("callSite.short")))
+          .orElse(j.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')))
+          .getOrElse("?")
+        starts.put(j.jobId, (site, j.time))
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = ends.put(j.jobId, j.time)
     }
     GraftBridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(counter)
+    spark.sparkContext.addSparkListener(listener)
     try {
       val t = body
       GraftBridge.drainListenerBus(spark)
-      (t, n.get)
-    } finally spark.sparkContext.removeSparkListener(counter)
+      val now = System.currentTimeMillis()
+      (t, starts.toSeq.sortBy(_._1).map { case (id, (site, t0)) =>
+        ((ends.getOrElse(id, now) - t0) / 1000.0, site)
+      })
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  /** Time every query twice through the noop sink. Factored out of main
-    * (mirroring `Verify.run`) so BenchSpec can prove the failure path. */
+  /** Run every query twice through `Metrics.measure`. Factored out of
+    * main (mirroring `Verify.run`) so IOSpec can prove the failure
+    * path and ScaleProfile can render the same runs. */
   def measure(spark: SparkSession,
               queries: Map[String, (SparkSession, String) => DataFrame],
               sfDir: String): Seq[QResult] =
     queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): (Either[String, Double], Long, Long) = {
+      def once(): (Either[String, (Double, Metrics.Profile)], Long, Seq[(Double, String)]) = {
         val c0 = GraftBridge.codegenCompiles
         val (run, jobs) = jobsDuring(spark) {
           val t0 = System.nanoTime()
           try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            Right((System.nanoTime() - t0) / 1e9)
+            val io = Metrics.measure(fn(spark, sfDir))
+            Right(((System.nanoTime() - t0) / 1e9, io))
           } catch { case e: Throwable =>
             val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
             System.err.println(s"[bench] $name failed: $msg")
@@ -169,7 +198,7 @@ object Bench {
         (run, GraftBridge.codegenCompiles - c0, jobs)
       }
       val (runs, compiles, jobs) = Seq(once(), once()).unzip3
-      QResult(name, runs, compiles, jobs)
+      QResult(name, runs.map(_.map(_._1)), compiles, jobs, runs.map(_.toOption.map(_._2)))
     }
 
   private def r3(d: Double): Double = math.round(d * 1000.0) / 1000.0
@@ -241,7 +270,11 @@ object Bench {
     (la, jvms)
   }
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal: escapes quote, backslash and ALL control chars
+    * (< 0x20). Verify writes oracle_sql.json and failures.json with it —
+    * a tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -253,9 +286,10 @@ object Bench {
 
   /** (profile JSON, tiny stdout line) for a measurement set. Failed runs
     * render as `null` in "runs"; fully-failed queries move from "queries"
-    * to "err" and contribute nothing to "value". "compiles" and "jobs"
-    * hold each run's codegen compile count and Spark job count, in the
-    * order of "runs". */
+    * to "err" and contribute nothing to "value". In the order of "runs":
+    * "compiles" holds each run's codegen compile count, "jobs" its Spark
+    * job count, "job_s" its jobs as `[seconds, "call site"]` and "io" its
+    * IO/shuffle profile (`null` for a failed run). */
   def render(results: Seq[QResult], sfDir: String,
              profilePath: String,
              telemetry: String = "",
@@ -264,13 +298,15 @@ object Bench {
     val failed = results.filter(_.best.isEmpty)
     val qs = measured.map(q => jstr(q.name) + ":" + r3(q.best.get))
       .mkString("{", ",", "}")
-    val runs = results.map { q =>
-      jstr(q.name) + ":[" +
-        q.runs.map { case Right(t) => r3(t).toString; case Left(_) => "null" }
-          .mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    def perRun(f: QResult => Seq[Long]) =
+    def perRun(f: QResult => Seq[String]) =
       results.map(q => jstr(q.name) + ":" + f(q).mkString("[", ",", "]")).mkString("{", ",", "}")
+    val runs = perRun(_.runs.map { case Right(t) => r3(t).toString; case Left(_) => "null" })
+    val jobS = perRun(_.jobs.map(_.map { case (t, site) => s"[${r3(t)},${jstr(site)}]" }
+      .mkString("[", ",", "]")))
+    val io = perRun(_.io.map(_.fold("null")(p =>
+      s"""{"rows_out":${p.rowsOut},"scan_rows":${p.scanRows},""" +
+        s""""shuffle_bytes":${p.shuffleBytes},"shuffle_records":${p.shuffleRecords},""" +
+        s""""exchanges":${p.nExchanges},"hash_exchanges":${p.nHashExchanges}}""")))
     val err = failed.map(q => jstr(q.name) + ":" + jstr(q.firstErr.getOrElse("")))
       .mkString("{", ",", "}")
     val total = r3(measured.map(_.best.get).sum)
@@ -279,7 +315,8 @@ object Bench {
       s"""{"metric":"total","unit":"sec","sf":${jstr(sfDir)},"n":${results.size},""" +
         telemetry +
         s""""reruns":$rer,""" +
-        s""""errors":${failed.size},"err":$err,"queries":$qs,"runs":$runs,"compiles":${perRun(_.compiles)},"jobs":${perRun(_.jobs)},"value":$total}"""
+        s""""errors":${failed.size},"err":$err,"queries":$qs,"runs":$runs,"compiles":${perRun(_.compiles.map(_.toString))},""" +
+        s""""jobs":${perRun(_.jobs.map(_.size.toString))},"job_s":$jobS,"io":$io,"value":$total}"""
     val stdoutLine =
       s"""{"metric":"total","unit":"sec","sf":${jstr(sfDir)},"n":${results.size},""" +
         s""""profile":${jstr(profilePath)},"errors":${failed.size},"queries":{},"value":$total}"""
@@ -339,7 +376,8 @@ object Bench {
         results0.map(q => redo.get(q.name).map(r => q.copy(
           runs = q.runs ++ r.runs.take(1),
           compiles = q.compiles ++ r.compiles.take(1),
-          jobs = q.jobs ++ r.jobs.take(1))).getOrElse(q))
+          jobs = q.jobs ++ r.jobs.take(1),
+          io = q.io ++ r.io.take(1))).getOrElse(q))
       }
     val (laEnd, jvmsEnd) = loadTelemetry()
     // self-adjudication: a run whose loadavg exceeds its own CPU budget

@@ -5,9 +5,11 @@ import graft.core.Metrics
 
 /** Catalog-wide runtime scale profile → SCALE.md.
   *
-  * Runs every `SparkEntry.queries` entry at the given SF (default sf0.1,
-  * the largest local fixture) under [[graft.core.Metrics.measure]] and
-  * commits the MEASURED IO/shuffle numbers — scan rows after pushdown,
+  * Renders [[Bench.measure]]'s runs of every `SparkEntry.queries` entry
+  * at the given SF (default sf0.1, the largest local fixture), under the
+  * session recipe: per query the best run's seconds, that run's Spark
+  * job count and its MEASURED IO/shuffle numbers from
+  * [[graft.core.Metrics.measure]] — scan rows after pushdown,
   * bytes/records actually crossing each exchange, exchange counts in the
   * final adaptive plan — as a markdown table sorted by shuffle bytes.
   *
@@ -30,25 +32,13 @@ object ScaleProfile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Bench.sessionBuilder(cpus).appName("graft-scale-profile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Bench.silenceBenignStreamingTermination()
 
-    case class Row(name: String, p: Metrics.Profile, sec: Double)
-    val rows = scala.collection.mutable.ArrayBuffer[Row]()
-    val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val t0 = System.nanoTime()
-        val p = Metrics.measure(fn(spark, sfDir))
-        val sec = (System.nanoTime() - t0) / 1e9
-        rows += Row(name, p, sec)
-        println(f"[scale] $name%-24s rows=${p.rowsOut}%9d scan=${p.scanRows}%9d " +
-          f"shufBytes=${p.shuffleBytes}%12d shufRec=${p.shuffleRecords}%9d " +
-          f"ex=${p.nExchanges}%2d hashEx=${p.nHashExchanges}%2d ${sec}%6.2fs")
-      } catch { case e: Throwable =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        failed += ((name, msg.linesIterator.take(1).mkString.take(200)))
-        System.err.println(s"[scale] $name FAILED: $msg")
-      }
-    }
+    case class Row(name: String, p: Metrics.Profile, jobs: Int, sec: Double)
+    val results = Bench.measure(spark, SparkEntry.queries, sfDir)
+    val rows = results.flatMap(q => q.bestRun.map { case (sec, i) =>
+      Row(q.name, q.io(i).get, q.jobs(i).size, sec) })
+    val failed = results.filter(_.best.isEmpty)
 
     def fmtBytes(b: Long): String =
       if (b >= (1L << 30)) f"${b / (1024.0 * 1024 * 1024)}%.2f GiB"
@@ -60,9 +50,11 @@ object ScaleProfile {
     val sb = new StringBuilder
     sb ++= s"# SCALE — per-query runtime IO/shuffle profile\n\n"
     sb ++= s"Generated by `graft.ScaleProfile` at `$sfDir` (local[$cpus], " +
-      s"shuffle.partitions=$cpus). Every number is read from the executed " +
-      "plan's own SQLMetrics via `graft.core.Metrics.measure` — not from " +
-      "static plans.\n\n"
+      s"shuffle.partitions=$cpus) in a session built by `Bench.sessionBuilder`, " +
+      "the recipe the bench measures. Each query runs twice through " +
+      "`Bench.measure`; every IO number is read from the executed plan's " +
+      "own SQLMetrics via `graft.core.Metrics.measure` — not from static " +
+      "plans.\n\n"
     sb ++= "Columns: **rowsOut** = rows the plan delivered; **scanRows** = " +
       "sum of leaf file-scan outputs (post-pushdown/pruning; a self-join " +
       "counts its table per scan); **shufBytes/shufRecords** = write-side " +
@@ -87,16 +79,16 @@ object ScaleProfile {
       "leave their scan partitions). MetricsSpec gates the top " +
       "shufflers' expansion factors and the zero-shuffle claims so this " +
       "table can't silently regress.\n\n"
-    sb ++= "| query | rowsOut | scanRows | shufBytes | shufRecords | ex | hashEx | sec |\n"
-    sb ++= "|---|---:|---:|---:|---:|---:|---:|---:|\n"
+    sb ++= "| query | rowsOut | scanRows | shufBytes | shufRecords | ex | hashEx | jobs | sec |\n"
+    sb ++= "|---|---:|---:|---:|---:|---:|---:|---:|---:|\n"
     sorted.foreach { r =>
       sb ++= s"| ${r.name} | ${r.p.rowsOut} | ${r.p.scanRows} | " +
         s"${fmtBytes(r.p.shuffleBytes)} | ${r.p.shuffleRecords} | " +
-        f"${r.p.nExchanges} | ${r.p.nHashExchanges} | ${r.sec}%.2f |\n"
+        f"${r.p.nExchanges} | ${r.p.nHashExchanges} | ${r.jobs} | ${r.sec}%.2f |\n"
     }
     if (failed.nonEmpty) {
       sb ++= "\n## Failed to profile\n\n"
-      failed.foreach { case (n, m) => sb ++= s"- `$n`: $m\n" }
+      failed.foreach(q => sb ++= s"- `${q.name}`: ${q.firstErr.getOrElse("")}\n")
     }
     val zero = rows.count(_.p.nHashExchanges == 0)
     sb ++= s"\n**Totals:** ${rows.size} profiled, ${failed.size} failed; " +

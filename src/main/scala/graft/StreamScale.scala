@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.streaming.Jobs
@@ -20,9 +20,10 @@ import graft.streaming.Jobs.Event
   *     gates this for the custom-state jobs.
   *   - **peakStateMem** — max state-store memory across batches.
   *   - **shufBytes** — total shuffle-write bytes across the replay's
-  *     stages (a stage listener; micro-batch boundaries make the same
-  *     keyed exchange repeat per trigger, so this is the steady network
-  *     cost of the job, not a one-shot).
+  *     stages (a stage listener, detached only after the listener bus
+  *     drains; micro-batch boundaries make the same keyed exchange
+  *     repeat per trigger, so this is the steady network cost of the
+  *     job, not a one-shot).
   *   - **inputRows / batches / sec** — replay volume and wall time.
   *
   * The foreachBatch ingest pipelines (dedup/media/IVF index
@@ -65,30 +66,14 @@ object StreamScale {
                 (start: Dataset[Event] => StreamingQuery): JobProfile = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-    val in = MemoryStream[Event]
-    val t0 = System.nanoTime()
-    val q = start(in.toDS())
-    try {
-      feed.grouped(chunk).foreach { c => in.addData(c: _*); q.processAllAvailable() }
-    } finally q.stop()
-    val sec = (System.nanoTime() - t0) / 1e9
-    // the listener bus is async — give in-flight stage events a beat to
-    // land before detaching (profile-doc precision, not a correctness path)
-    Thread.sleep(300)
-    spark.sparkContext.removeSparkListener(tally)
-    val progress = q.recentProgress.toSeq
-    val inputRows = progress.map(_.numInputRows).sum
-    val stateRows = progress.reverse
-      .collectFirst { case p if p.stateOperators.nonEmpty =>
-        p.stateOperators.map(_.numRowsTotal).sum }
-      .getOrElse(0L)
-    val peakMem = progress
-      .map(p => p.stateOperators.map(_.memoryUsedBytes).sum)
-      .maxOption.getOrElse(0L)
-    JobProfile(name, progress.size, inputRows, stateRows, peakMem,
-      tally.bytes.get(), tally.records.get(), sec)
+    replayed(spark, name) {
+      val in = MemoryStream[Event]
+      val q = start(in.toDS())
+      try {
+        feed.grouped(chunk).foreach { c => in.addData(c: _*); q.processAllAvailable() }
+      } finally q.stop()
+      q
+    }
   }
 
   /** Two-input variant for the stream-stream join: both sides fed in
@@ -98,32 +83,49 @@ object StreamScale {
                  (start: (DataFrame, DataFrame) => DataFrame): JobProfile = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
+    replayed(spark, name) {
+      val views = MemoryStream[Event]
+      val clicks = MemoryStream[Event]
+      val q = start(views.toDF(), clicks.toDF())
+        .writeStream.format("noop").outputMode("append").start()
+      try {
+        val vs = feed.filter(_.event_type == "view").grouped(chunk).toSeq
+        val cs = feed.filter(_.event_type == "click").grouped(chunk).toSeq
+        vs.zipAll(cs, Seq.empty[Event], Seq.empty[Event]).foreach { case (v, c) =>
+          if (v.nonEmpty) views.addData(v: _*)
+          if (c.nonEmpty) clicks.addData(c: _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      q
+    }
+  }
+
+  /** Time `replay` (start, feed and stop one query) under the stage
+    * tally and read the stopped query's progress into its profile. The
+    * listener bus is drained before the tally is detached, so every
+    * stage event of the replay reaches it. */
+  private def replayed(spark: SparkSession, name: String)
+                      (replay: => StreamingQuery): JobProfile = {
     val tally = new ShuffleTally
     spark.sparkContext.addSparkListener(tally)
-    val views = MemoryStream[Event]
-    val clicks = MemoryStream[Event]
-    val t0 = System.nanoTime()
-    val q = start(views.toDF(), clicks.toDF())
-      .writeStream.format("noop").outputMode("append").start()
-    try {
-      val vs = feed.filter(_.event_type == "view").grouped(chunk).toSeq
-      val cs = feed.filter(_.event_type == "click").grouped(chunk).toSeq
-      vs.zipAll(cs, Seq.empty[Event], Seq.empty[Event]).foreach { case (v, c) =>
-        if (v.nonEmpty) views.addData(v: _*)
-        if (c.nonEmpty) clicks.addData(c: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val sec = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(300)
-    spark.sparkContext.removeSparkListener(tally)
+    val (q, sec) = try {
+      val t0 = System.nanoTime()
+      val q = replay
+      val sec = (System.nanoTime() - t0) / 1e9
+      GraftBridge.drainListenerBus(spark)
+      (q, sec)
+    } finally spark.sparkContext.removeSparkListener(tally)
     val progress = q.recentProgress.toSeq
-    JobProfile(name, progress.size, progress.map(_.numInputRows).sum,
-      progress.reverse.collectFirst { case p if p.stateOperators.nonEmpty =>
-        p.stateOperators.map(_.numRowsTotal).sum }.getOrElse(0L),
-      progress.map(p => p.stateOperators.map(_.memoryUsedBytes).sum)
-        .maxOption.getOrElse(0L),
-      tally.bytes.get(), tally.records.get(), sec)
+    val stateRows = progress.reverse
+      .collectFirst { case p if p.stateOperators.nonEmpty =>
+        p.stateOperators.map(_.numRowsTotal).sum }
+      .getOrElse(0L)
+    val peakMem = progress
+      .map(p => p.stateOperators.map(_.memoryUsedBytes).sum)
+      .maxOption.getOrElse(0L)
+    JobProfile(name, progress.size, progress.map(_.numInputRows).sum, stateRows,
+      peakMem, tally.bytes.get(), tally.records.get(), sec)
   }
 
   private def noop(df: DataFrame, mode: String): StreamingQuery =

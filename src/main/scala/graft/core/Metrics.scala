@@ -12,6 +12,10 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * documented "zero-shuffle" must report 0 shuffle bytes at runtime, not
   * just a clean-looking static plan (MetricsSpec holds exactly that gate
   * for the split/quality family, and the inverse for a join).
+  *
+  * `graft.Bench.measure` executes every catalog run through `measure`,
+  * so each run's profile lands in the Bench profile's "io" field and,
+  * through ScaleProfile, in SCALE.md.
   */
 object Metrics {
 

@@ -34,7 +34,7 @@ class GraphSpec extends SparkSpec {
     // two-stage convergence count per round exceeds it
     val edges = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("src", "dst")
     val (comp, jobs) = Bench.jobsDuring(spark)(Graph.connectedComponents(edges))
-    assert(jobs <= 5, s"$jobs jobs")
+    assert(jobs.size <= 5, s"${jobs.size} jobs")
     assert(comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L, 6L -> 5L))
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.core.{IO, Sampling}
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class IOSpec extends SparkSpec {
 
@@ -176,15 +177,60 @@ class IOSpec extends SparkSpec {
     assert(Seq("q_ok", "q_broken").forall(n =>
       p.get("compiles").get(n).size == 2 &&
         p.get("compiles").get(n).get(1).isIntegralNumber))
-    // ...and its Spark job count: the healthy query's noop write runs one
+    // ...and its Spark job count: executing the healthy query's plan runs
+    // at least one job
     assert(Seq("q_ok", "q_broken").forall(n =>
       p.get("jobs").get(n).size == 2 &&
         p.get("jobs").get(n).get(1).isIntegralNumber))
     assert(p.get("jobs").get("q_ok").get(1).asLong >= 1)
+    // ...and its IO profile: region's 5 rows read and delivered, null for
+    // a failed run
+    assert(Seq("q_ok", "q_broken").forall(p.get("io").get(_).size == 2))
+    (0 until 2).foreach { i =>
+      val io = p.get("io").get("q_ok").get(i)
+      assert(io.get("rows_out").asLong == 5 && io.get("scan_rows").asLong > 0, s"io: $io")
+      assert(p.get("io").get("q_broken").get(i).isNull)
+    }
+    // ...and each job as [seconds >= 0, call site], as many as "jobs" counts
+    Seq("q_ok", "q_broken").foreach { n =>
+      val js = p.get("job_s").get(n)
+      assert(js.size == 2)
+      (0 until 2).foreach { i =>
+        assert(js.get(i).size == p.get("jobs").get(n).get(i).asInt)
+        js.get(i).elements.asScala.foreach { j =>
+          assert(j.size == 2 && j.get(0).isNumber && j.get(0).asDouble >= 0 &&
+            j.get(1).isTextual && j.get(1).asText.nonEmpty, s"job: $j")
+        }
+      }
+    }
     assert(math.abs(p.get("value").asDouble -
       p.get("queries").get("q_ok").asDouble) < 1e-9)
     val l = mapper.readTree(line)
     assert(l.get("errors").asInt == 1 && l.get("n").asInt == 2)
+  }
+
+  test("Verify and Bench write quotes, backslashes and control chars as exact JSON strings") {
+    val odd = "q \"odd\" \\ tab\t cr\r ctl\u0001"
+    val sql = "SELECT '\"' AS q, '\\' AS b\t-- cr\r ctl\u0001"
+    val outDir = java.nio.file.Files.createTempDirectory("graft_verify_json").toString
+    val failures = Verify.run(spark,
+      Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+        odd -> ((_, _) => throw new IllegalStateException(odd))),
+      Map(odd -> sql), sf0001, outDir)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def read(f: String) = mapper.readTree(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$outDir/$f")))
+    assert(read("oracle_sql.json").get(odd).asText == sql)
+    val failJson = read("failures.json")
+    assert(failJson.size == 1 && failJson.get(odd).asText == failures(odd))
+    val results = Seq(
+      Bench.QResult(odd, Seq(Left(sql))),
+      Bench.QResult(odd + "ok", Seq(Right(0.5)), jobs = Seq(Seq((0.25, sql)))))
+    val p = mapper.readTree(Bench.render(results, odd, "unused.json")._1)
+    assert(p.get("sf").asText == odd)
+    assert(p.get("err").get(odd).asText == sql)
+    assert(p.get("queries").get(odd + "ok").asDouble == 0.5)
+    assert(p.get("job_s").get(odd + "ok").get(0).get(0).get(1).asText == sql)
   }
 
   test("Bench stall adjudication: a contiguous elevated window (>=3) is " +

@@ -9,8 +9,8 @@ import graft.core.Tables
   * the listener bus through `GraftBridge` around the counted body. */
 class TablesSpec extends SparkSpec {
 
-  private def jobs(s: org.apache.spark.sql.SparkSession)(body: => Any): Long =
-    Bench.jobsDuring(s)(body)._2
+  private def jobs(s: org.apache.spark.sql.SparkSession)(body: => Any): Int =
+    Bench.jobsDuring(s)(body)._2.size
 
   test("a second read of a table in the same session launches no job") {
     val s = spark.newSession()

@@ -6,7 +6,9 @@ Usage: cmp_profiles.py A.json B.json [threshold]
 Prints total, geomean speedup A->B, and per-query deltas beyond the
 threshold (default 10%), sorted by absolute seconds delta. When both
 profiles carry the per-run Spark job counts (`"jobs"`), it then prints
-every common query whose first-run job count changed.
+every common query whose first-run job count changed; when both carry
+the per-run IO profiles (`"io"`), every common query whose first run's
+hash-exchange count or shuffle bytes changed.
 """
 import json
 import math
@@ -37,6 +39,7 @@ def main() -> None:
     for d, q in rows:
         print(f"{'+' if d > 0 else ''}{d:7.3f}s  {qa[q]:7.3f} -> {qb[q]:7.3f}  {q}")
     print_job_changes(a, b, common)
+    print_io_changes(a, b, common)
 
 
 def print_job_changes(a: dict, b: dict, common: list) -> None:
@@ -51,6 +54,27 @@ def print_job_changes(a: dict, b: dict, common: list) -> None:
     print(f"jobs (first run): {len(changed)} of {len(rows)} queries changed")
     for d, q in changed:
         print(f"{d:+5d} jobs  {ja[q][0]:4d} -> {jb[q][0]:4d}  {q}")
+
+
+def print_io_changes(a: dict, b: dict, common: list) -> None:
+    """Per-query change in the first run's hash exchanges and shuffle bytes."""
+    if "io" not in a or "io" not in b:
+        print("io: n/a (a profile predates the \"io\" field)")
+        return
+    rows = []
+    for q in common:
+        ia, ib = (p["io"].get(q, [None])[0] for p in (a, b))
+        if ia and ib:
+            rows.append((q, ia, ib))
+    changed = [r for r in rows
+               if r[1]["hash_exchanges"] != r[2]["hash_exchanges"]
+               or r[1]["shuffle_bytes"] != r[2]["shuffle_bytes"]]
+    print(f"io (first run): {len(changed)} of {len(rows)} queries changed "
+          "hash exchanges or shuffle bytes")
+    for q, ia, ib in changed:
+        print(f"{ib['hash_exchanges'] - ia['hash_exchanges']:+3d} hashEx  "
+              f"{ib['shuffle_bytes'] - ia['shuffle_bytes']:+12d} B  "
+              f"{ia['shuffle_bytes']:12d} -> {ib['shuffle_bytes']:12d}  {q}")
 
 
 if __name__ == "__main__":
