@@ -56,7 +56,7 @@ object ScaleProfile {
       "own SQLMetrics via `graft.core.Metrics.measure` — not from static " +
       "plans.\n\n"
     sb ++= "Columns: **rowsOut** = rows the plan delivered; **scanRows** = " +
-      "sum of leaf file-scan outputs (post-pushdown/pruning; a self-join " +
+      "sum of leaf file and DSv2 scan outputs (post-pushdown/pruning; a self-join " +
       "counts its table per scan); **shufBytes/shufRecords** = write-side " +
       "totals across every shuffle exchange; **ex/hashEx** = exchange " +
       "count in the final (post-AQE) plan / hash-partitioning subset " +

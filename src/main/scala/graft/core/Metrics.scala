@@ -1,8 +1,9 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{DataSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase
 
 /** Runtime IO/shuffle profiling from the executed plan's own SQLMetrics —
   * the operability surface a 100 TB deployment watches: how many rows the
@@ -20,10 +21,11 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 object Metrics {
 
   /** One executed query's profile. `rowsOut` counts the rows the plan
-    * delivered; `scanRows` sums the leaf file-scan outputs (what was
-    * actually read after pushdown/pruning); `shuffleBytes`/`shuffleRecords`
-    * sum every exchange's write-side metrics; `nExchanges` counts shuffle
-    * exchanges in the FINAL adaptive plan. */
+    * delivered; `scanRows` sums the leaf scan outputs, file and DSv2
+    * (what was actually read after pushdown/pruning);
+    * `shuffleBytes`/`shuffleRecords` sum every exchange's write-side
+    * metrics; `nExchanges` counts shuffle exchanges in the FINAL adaptive
+    * plan. */
   /** `nHashExchanges` counts hash-partitioning exchanges only — the
     * COMPUTATION shuffles; a deterministic catalog query's presentation
     * ORDER BY adds one range exchange that a zero-shuffle claim does not
@@ -67,7 +69,8 @@ object Metrics {
     val nodes = finalNodes(qe.executedPlan)
     def metric(n: SparkPlan, key: String): Long =
       n.metrics.get(key).map(_.value).getOrElse(0L)
-    val scans = nodes.filter(_.getClass.getSimpleName.contains("FileSourceScan"))
+    val scans = nodes.filter { // file scans and DSv2 scans (the stores' BatchScanExec)
+      case _: DataSourceScanExec | _: DataSourceV2ScanExecBase => true; case _ => false }
     val exchanges = nodes.filter(_.getClass.getSimpleName.contains("ShuffleExchange"))
     Profile(
       rowsOut = rows.value,

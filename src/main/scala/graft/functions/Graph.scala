@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,66 +15,66 @@ import org.apache.spark.sql.functions._
   * proving nothing changes — near-dup clusters are tiny and dense, so
   * 2-5 rounds in practice.
   *
-  * Round shape: one join and one aggregate. `sym` is built once: both
-  * edge directions plus a self-loop at each edge's endpoints, checkpointed
-  * (duplicate rows, self-loops included, change no minimum, so they are
-  * kept rather than paying a shuffle to drop them). Round 1 is
-  * `sym.groupBy(src).min(dst)` and needs no join. Each later round joins
-  * `sym` to the labels on `dst = id` and groups by `src`, producing
-  * `comp = min(comp)` and `prev = min(comp where src = dst)`: the
-  * self-loop brings each vertex's own label into its group, so `comp` is
-  * exactly `least(own label, neighbour min)` and `prev` is the own label.
-  * The round is checkpointed once, and convergence is `count(comp <
-  * prev)` over the checkpointed frame's rows.
+  * The loop is procedural RDD code over pair RDDs that share one
+  * `HashPartitioner`, not a DataFrame plan per round: the plan is fixed
+  * and iterative, so there is nothing for Catalyst or AQE to choose, and
+  * planning each round would cost the driver more than the round's work
+  * on near-dup-sized graphs. The partition count is the input's, which
+  * AQE has already sized by bytes.
   *
-  * Job counts under the session recipe (AQE on). The checkpoints are
-  * lazy: each is written by the first job that reads it, so `sym` adds
-  * none (round 1's shuffle stage writes it) and a round's count writes
-  * the round's labels. Round 1 takes 2 jobs (the aggregate's shuffle
-  * stage and the count) and each later round 3 (the labels' broadcast
-  * for the join on top, while they fit under the broadcast threshold):
-  * 5 for a graph of diameter 1. `localCheckpoint` cuts the lineage each
-  * round (iterative DataFrame loops otherwise build exponential plans),
-  * and the Spark driver sees only the per-round changed-count.
+  * Round shape. `sym`, keyed by `dst` with `src` as value, is built once:
+  * both edge directions plus a self-loop at each endpoint (duplicates
+  * change no minimum, so they are kept), hash-partitioned and
+  * local-checkpointed. Round 1 is `sym.reduceByKey(min)`, narrow because
+  * `sym` is already partitioned by its key. Each later round joins `sym`
+  * to the labels (narrow: both sides share the partitioner), maps each
+  * row to (src, dst's label) and reduces by key with min: one shuffle,
+  * and the self-loop brings each vertex's own label into its minimum.
+  * Each round's labels are local-checkpointed, which keeps the
+  * partitioner and cuts the lineage, and convergence is the count of
+  * labels that fell below the previous round's, a narrow join.
+  *
+  * Job counts: one Spark job per round, with two stages. The first
+  * writes the round's shuffle (round 1's is `sym`'s partitioning of the
+  * input); the second is the convergence count, which also writes the
+  * round's checkpoint (and, in round 1, `sym`'s). A graph of diameter 1
+  * takes 2 jobs, and no round is planned by Catalyst or re-planned by AQE.
   */
 object Graph {
 
-  /** Connected components of an undirected edge list (`src`, `dst`).
-    * Returns (id, comp) with comp = min vertex id in the component.
-    * Fails when the labels still change after `maxIter` rounds. */
+  /** Connected components of an undirected edge list (`src`, `dst`,
+    * read as bigint). Returns (id, comp) with comp = min vertex id in the
+    * component. Fails on an edge with a null endpoint, and when the
+    * labels still change after `maxIter` rounds. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val sym = e
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .union(e.select(col("src"), col("src").as("dst")))
-      .union(e.select(col("dst").as("src"), col("dst")))
-      .localCheckpoint(false)
-    // one round's update from (src, dst, comp = dst's current label)
-    def round(neighbours: DataFrame): DataFrame =
-      neighbours.groupBy(col("src")).agg(
-          min(col("comp")).as("comp"),
-          min(when(col("src") === col("dst"), col("comp"))).as("prev"))
-        .select(col("src").as("id"), col("comp"), col("prev"))
-        .localCheckpoint(false)
-    var labels = sym // replaced by round 1's labels
-    var changed = 1L
-    var i = 0
+    val in = edges.select(col("src").cast("bigint"), col("dst").cast("bigint"))
+      .queryExecution.toRdd
+    val part = new HashPartitioner(in.getNumPartitions)
+    val nulls = in.sparkContext.longAccumulator("graft.graph.nullEndpoints")
+    val sym = in.flatMap { r =>
+      if (r.isNullAt(0) || r.isNullAt(1)) { nulls.add(1L); Nil }
+      else { val (s, d) = (r.getLong(0), r.getLong(1)); Seq(d -> s, s -> d, s -> s, d -> d) }
+    }.partitionBy(part).localCheckpoint()
+    var labels = sym.reduceByKey(part, math.min(_, _)).localCheckpoint() // round 1
+    // one job per round over every partition: it also writes the checkpoint
+    var changed = if (maxIter < 1) 1L else labels.filter { case (v, c) => c < v }.count()
+    var i = 1
     while (changed > 0 && i < maxIter) {
-      val neighbours =
-        if (i == 0) sym.select(col("src"), col("dst"), col("dst").as("comp"))
-        else sym.join(labels.select(col("id"), col("comp")), col("dst") === col("id"))
-          .select(col("src"), col("dst"), col("comp"))
-      labels = round(neighbours)
-      // one job over every partition: it also writes the checkpoint
-      changed = labels.filter(col("comp") < col("prev")).rdd.count()
+      val next = sym.join(labels, part).values
+        .reduceByKey(part, math.min(_, _)).localCheckpoint()
+      changed = next.join(labels, part).filter { case (_, (c, old)) => c < old }.count()
+      labels = next
       i += 1
     }
+    // a null read as id 0 would merge unrelated vertices into one component
+    require(nulls.value == 0,
+      s"connectedComponents: ${nulls.value} edges have a null endpoint")
     // silent non-convergence would split components and corrupt the dedup
     // decision downstream — fail loudly instead
     require(changed == 0,
       s"connectedComponents did not converge in $maxIter rounds " +
         s"($changed labels still changing) — raise maxIter (graph diameter exceeds it)")
-    labels.select(col("id"), col("comp"))
+    edges.sparkSession.createDataFrame(labels).toDF("id", "comp")
   }
 
   /** Dedup decision from near-dup pairs: cluster, keep the minimum id of

@@ -680,9 +680,10 @@ object TextCatalog {
     * the dedup. Fully oracled as of round 5: the pair set is md5-derived
     * (see [[minhashPairsCte]]) and DuckDB computes the same min-label
     * components with a recursive transitive-closure CTE — tractable at
-    * oracle SF because near-dup clusters are tiny; the engine side keeps
-    * the iterative join+agg form that scales. GraphSpec additionally
-    * proves convergence/lineage behavior. */
+    * oracle SF because near-dup clusters are tiny; the engine side runs
+    * `Graph.connectedComponents`' min-label rounds, one co-partitioned
+    * RDD job per round, which scale with the pair count. GraphSpec
+    * additionally proves convergence, job counts and null handling. */
   def dedupClustersQ(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = minhashPairs(spark, sfDir).select(col("d1"), col("d2"))
     graft.functions.Graph.dedupClusters(pairs, "d1", "d2")

@@ -26,15 +26,16 @@ class GraphSpec extends SparkSpec {
     Graph.connectedComponents(edges.toDF("src", "dst"), maxIter)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("components of a diameter-1 graph launch at most 5 Spark jobs") {
+  test("components of a diameter-1 graph launch at most 2 Spark jobs") {
     // the dedup case: near-dup pairs are mostly single edges, so this is
     // the round count the dedup queries pay (two rounds: one to label,
-    // one to prove nothing changes). Round 1 takes 2 jobs and round 2
-    // takes 3; an eager checkpoint, a join back to the labels or a
-    // two-stage convergence count per round exceeds it
+    // one to prove nothing changes). Each round is one job: its shuffle
+    // stage and its count, which writes the round's checkpoint. An eager
+    // checkpoint, a join that is not co-partitioned or a separate
+    // convergence job per round exceeds it
     val edges = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("src", "dst")
     val (comp, jobs) = Bench.jobsDuring(spark)(Graph.connectedComponents(edges))
-    assert(jobs.size <= 5, s"${jobs.size} jobs")
+    assert(jobs.size <= 2, s"${jobs.size} jobs")
     assert(comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L, 6L -> 5L))
   }
@@ -44,6 +45,47 @@ class GraphSpec extends SparkSpec {
       (5L, 5L), (5L, 4L), (6L, 2L), (6L, 6L))
     assert(components(edges) ==
       Map(1L -> 1L, 2L -> 1L, 6L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 4L))
+  }
+
+  test("labels match a driver-side union-find on seeded random graphs") {
+    // min label per union-find class; ids span negative values and both
+    // ends of the long range, and edges repeat and self-loop
+    def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(v: Long): Long = {
+        val p = parent.getOrElseUpdate(v, v)
+        if (p == v) v else { val r = find(p); parent(v) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(v => v -> find(v)).toMap
+    }
+    val rnd = new scala.util.Random(20261020L)
+    val extremes = Seq(Long.MinValue, Long.MinValue + 1, -7L, -1L, 0L,
+      Long.MaxValue - 1, Long.MaxValue)
+    for (graph <- 0 until 4; nParts <- Seq(1, 3, 7)) {
+      val ids = extremes ++ Seq.fill(25)(rnd.nextLong() % 1000L)
+      val base = Seq.fill(20 + rnd.nextInt(20))(
+        (ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size))))
+      val edges = base ++ base.take(3) ++ base.take(2).map(_.swap) :+ (ids(0), ids(0))
+      // a path of n vertices needs n rounds: never fail on diameter here
+      val labels = Graph.connectedComponents(
+        edges.toDF("src", "dst").repartition(nParts), maxIter = ids.size + 1)
+      assert(labels.rdd.getNumPartitions == nParts)
+      assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        unionFind(edges), s"graph $graph over $nParts partitions")
+    }
+  }
+
+  test("an edge with a null endpoint fails, naming the null count") {
+    // read as 0 it would merge unrelated vertices into component 0
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (None, Some(3L)), (Some(4L), None), (Some(0L), Some(5L)))
+      .toDF("src", "dst")
+    val e = intercept[IllegalArgumentException](Graph.connectedComponents(edges))
+    assert(e.getMessage.contains("2 edges have a null endpoint"), e.getMessage)
   }
 
   test("a chain needing exactly maxIter rounds converges; one more vertex fails") {

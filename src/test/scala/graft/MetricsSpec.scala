@@ -46,6 +46,19 @@ class MetricsSpec extends SparkSpec {
     assert(p.scanRows > 0)
   }
 
+  test("a store (DSv2) read reports its rows as scan rows") {
+    // the store's reads are BatchScanExec, not a file scan: a scan-rows
+    // filter that only knows file scans reports 0 for every store query
+    val spark0 = spark
+    import spark0.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_metrics_store").toString
+    val df = (0 until 37).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    df.write.format("epochstore").mode("append")
+      .option("path", root).option("epoch", "0").save()
+    val p = Metrics.measure(graft.sources.EpochStore.read(spark, root, df.schema))
+    assert(p.rowsOut == 37 && p.scanRows == 37, s"$p")
+  }
+
   test("SCALE.md top shufflers: per-key windows move at most input-linear records") {
     // q_window_lag / q_scd2 / q_moving_avg head the SCALE.md table with
     // shufRecords == 2x scanRows exactly: one user_id/key hash exchange

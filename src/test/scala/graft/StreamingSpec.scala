@@ -915,8 +915,10 @@ class StreamingSpec extends SparkSpec {
     import graft.core.Listings
     val dir = Files.createTempDirectory("graft_liststream").toString
     // land 3 real reference files, one of them twice (re-crawl)
-    val refFiles = new java.io.File(Listings.ReferenceRun)
-      .listFiles().filter(_.getName.endsWith(".json")).take(3)
+    // listFiles is null for a missing directory: fail as Listings.readJson does
+    val refFiles = Option(new java.io.File(Listings.ReferenceRun).listFiles())
+      .getOrElse(Array.empty[java.io.File]).filter(_.getName.endsWith(".json")).take(3)
+    require(refFiles.nonEmpty, s"no house_*.json files under ${Listings.ReferenceRun}")
     refFiles.zipWithIndex.foreach { case (f, i) =>
       java.nio.file.Files.copy(f.toPath,
         java.nio.file.Paths.get(s"$dir/house_$i.json"))
