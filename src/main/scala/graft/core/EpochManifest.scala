@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -25,6 +25,21 @@ import org.apache.spark.sql.types.StructType
   *   f<epoch>-<attempt>/...        compaction folds (append refuses to
   *                                 replace these — they hold many epochs)
   *   _manifests/m<G>.json          one complete entry list per commit
+  *   _manifests/branch-<name>/m<G>.json  a branch's manifest lineage
+  *   _manifests/tags.v<N>.json     named snapshot tags (name → generation)
+  *   _manifests/columns.v<N>.json  column RENAME / DROP ops, in order
+  *   _manifests/layout.v<N>.json   the current declared partition spec
+  *   _manifests/constraints.v<N>.json  declared CHECK constraints
+  *                                 ([[graft.sources.EpochStoreConstraints]])
+  *
+  * Every `<prefix>N.json` family above is a VERSIONED LOG with one
+  * primitive behind it: [[versions]] lists a log ascending, [[readHead]]
+  * reads the highest complete version (re-listing when it vanished
+  * between list and open), and [[publishNext]] is the one OCC loop —
+  * read the head, derive the next body from it, CAS-publish version
+  * N+1 create-if-absent. The metadata logs then delete all but the
+  * previous version; the manifest lineages leave retention to [[gc]].
+  * Each log owns only its render, parse and validation.
   *
   * Writer contract: MULTI-WRITER with optimistic concurrency. Every
   * commit is a CAS on the manifest generation: the next generation's
@@ -88,27 +103,14 @@ object EpochManifest {
 
   private def manifestDir(root: String) = new Path(s"$root/_manifests")
 
-  private def gen(p: Path): Option[Long] = {
-    val n = p.getName
-    if (n.startsWith("m") && n.endsWith(".json"))
-      n.stripPrefix("m").stripSuffix(".json").toLongOption
-    else None
-  }
-
   /** All complete manifests, ascending by generation. */
-  private def manifests(spark: SparkSession, root: String): Seq[(Long, Path)] = {
-    val fs = fsOf(spark, root)
-    val md = manifestDir(root)
-    if (!fs.exists(md)) Seq.empty
-    else fs.listStatus(md).toSeq.flatMap(s => gen(s.getPath).map(_ -> s.getPath))
-      .sortBy(_._1)
-  }
+  private def manifests(spark: SparkSession, root: String): Seq[(Long, FileStatus)] =
+    versions(fsOf(spark, root), manifestDir(root), "m")
 
-  private def parse(spark: SparkSession, p: Path): Seq[Entry] = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+  private def readEntries(fs: FileSystem, p: Path): Seq[Entry] =
+    parse(readBody(fs, p))
+
+  private def parse(body: String): Seq[Entry] =
     body.linesIterator.filter(_.nonEmpty).map { line =>
       // fixed shape {"epoch":N[,"lo":M],"dir":"..."} written by commit()
       // below — not a general JSON parser, and dir names never contain
@@ -126,7 +128,6 @@ object EpochManifest {
         else Nil
       Entry(e, d, lo, dv)
     }.toSeq
-  }
 
   // ------------------------------------------------- OCC primitives
 
@@ -139,7 +140,7 @@ object EpochManifest {
     * immediately. */
   val OrphanReclaimAfterMs: Long = 3600L * 1000L
 
-  private def isLocal(fs: org.apache.hadoop.fs.FileSystem): Boolean = {
+  private def isLocal(fs: FileSystem): Boolean = {
     val scheme = fs.getUri.getScheme
     scheme == null || scheme == "file"
   }
@@ -149,7 +150,7 @@ object EpochManifest {
     * atomic; Hadoop's local `create(path, false)` is check-then-create
     * with a race window); remote FSs use `create(overwrite = false)`,
     * which HDFS implements atomically in the NameNode. */
-  private def exclusiveCreate(fs: org.apache.hadoop.fs.FileSystem,
+  private def exclusiveCreate(fs: FileSystem,
                               path: Path): Boolean = {
     fs.mkdirs(path.getParent)
     if (isLocal(fs))
@@ -170,7 +171,7 @@ object EpochManifest {
     * Hadoop rename, which HDFS makes atomic-and-failing when `dst`
     * exists. Returns false when another writer won the generation; `src`
     * is cleaned up either way. */
-  private def atomicClaim(fs: org.apache.hadoop.fs.FileSystem,
+  private def atomicClaim(fs: FileSystem,
                           src: Path, dst: Path): Boolean = {
     val won =
       if (isLocal(fs)) {
@@ -196,20 +197,20 @@ object EpochManifest {
       }
       .mkString("", "\n", "\n")
 
-  /** CAS-publish `body` as generation `gen` under manifest dir `md`
-    * (main lineage or a branch's): true iff this writer won the
-    * generation. */
-  private def publishAt(fs: org.apache.hadoop.fs.FileSystem, md: Path,
-                        gen: Long, body: String,
+  /** CAS-publish `body` as version `v` of `dir`'s `prefix` log (`m` for
+    * a manifest lineage, main's or a branch's): true iff this writer won
+    * the version. */
+  private def publishAt(fs: FileSystem, dir: Path, prefix: String,
+                        v: Long, body: String,
                         create: Boolean = true): Boolean = {
     // a SEEDED lineage (branch) must never be recreated here: a publish
     // retires the branch dir by rename, and an unconditional mkdirs
     // would let a racing branch commit CAS into a recreated empty dir
     // during the publish window instead of refusing
-    if (!create && !fs.exists(md)) return false
-    if (create) fs.mkdirs(md)
-    val tmp = new Path(md,
-      s".m$gen-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    if (!create && !fs.exists(dir)) return false
+    if (create) fs.mkdirs(dir)
+    val tmp = new Path(dir,
+      s".$prefix$v-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     // seeded lineages write NON-recursively: a plain create would
     // silently rebuild the parent dirs, re-opening the publish-window
     // hole the exists check above narrows (the retire rename can land
@@ -218,47 +219,132 @@ object EpochManifest {
     val out =
       if (create) fs.create(tmp, true)
       else try fs.createNonRecursive(tmp, true, 4096,
-        fs.getDefaultReplication(md), fs.getDefaultBlockSize(md), null)
+        fs.getDefaultReplication(dir), fs.getDefaultBlockSize(dir), null)
       catch {
         case _: java.io.FileNotFoundException => return false
         case _: java.io.IOException => return false
       }
     try out.write(body.getBytes("UTF-8")) finally out.close()
-    atomicClaim(fs, tmp, new Path(md, s"m$gen.json"))
+    atomicClaim(fs, tmp, new Path(dir, s"$prefix$v.json"))
   }
 
-  /** The ONE CAS/retry loop both lineages share: read the head under
-    * `md`, rebase, CAS-publish head+1; `seeded` = false allows an empty
-    * lineage (main's first commit), true requires one (branch commits
-    * need their base). */
-  private def commitAtDir(spark: SparkSession, md: Path, what: String,
-                          seeded: Boolean)
-                         (rebase: Seq[Entry] => Seq[Entry]): Long = {
-    val fs = md.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // ------------------------------------------------- versioned logs
+
+  /** `dir`'s `<prefix>N.json` files, ascending by N — the one lister of
+    * every versioned log. Empty when `dir` does not exist (probed first,
+    * so a store that never wrote the log lists nothing; a dir retired
+    * between the probe and the listing reads as empty too) — unless
+    * `mustExist`: a caller that took `dir` from a listing of its parent
+    * then gets the listing's FileNotFoundException, i.e. learns that the
+    * lineage moved since, instead of reading it as holding nothing. */
+  private def versions(fs: FileSystem, dir: Path, prefix: String,
+                       mustExist: Boolean = false): Seq[(Long, FileStatus)] = {
+    val ss =
+      if (mustExist) fs.listStatus(dir)
+      else if (!fs.exists(dir)) Array.empty[FileStatus]
+      else try fs.listStatus(dir)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    ss.toSeq.flatMap { s =>
+      val n = s.getPath.getName
+      if (n.startsWith(prefix) && n.endsWith(".json"))
+        n.stripPrefix(prefix).stripSuffix(".json").toLongOption.map(_ -> s)
+      else None
+    }.sortBy(_._1)
+  }
+
+  private def readBody(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  /** A versioned log as one read saw it: every listed version,
+    * ascending, and the highest one's body (None for an empty log). */
+  private[graft] final case class Head(versions: Seq[(Long, FileStatus)],
+                                       body: Option[String]) {
+    /** The head's version number; 0 for an empty log. */
+    def version: Long = versions.lastOption.map(_._1).getOrElse(0L)
+  }
+
+  /** Read the highest complete version of `dir`'s `prefix` log — one
+    * listing and one open. When that version vanished between the two
+    * (a concurrent publish reclaimed it), list again; when the retries
+    * run out, fail loudly: reading a log as empty because its files
+    * kept moving would silently drop tags, renames, a layout or CHECK
+    * constraints. */
+  private[graft] def readHead(fs: FileSystem, dir: Path,
+                              prefix: String): Head = {
+    def attempt(retriesLeft: Int): Head = {
+      val vs = versions(fs, dir, prefix)
+      vs.lastOption match {
+        case None => Head(vs, None)
+        case Some((_, s)) =>
+          try Head(vs, Some(readBody(fs, s.getPath))) catch {
+            case _: java.io.FileNotFoundException if retriesLeft > 0 =>
+              attempt(retriesLeft - 1)
+            case e: java.io.FileNotFoundException =>
+              throw new IllegalStateException(
+                s"versioned log $dir/${prefix}N.json: every listed head " +
+                  "vanished between list and read across retries — racing " +
+                  "publishes; retry the operation", e)
+          }
+      }
+    }
+    attempt(3)
+  }
+
+  /** The ONE optimistic-concurrency publish every versioned log goes
+    * through: read the head, derive the next body from it (`next` sees
+    * None for an empty log and throws to refuse — nothing published),
+    * CAS-publish version N+1 create-if-absent. A lost race re-reads and
+    * re-derives, so racing writers each land exactly once, each derived
+    * from the version it actually follows. With `prune`, all but the
+    * previous version are deleted once the new one lands: a reader that
+    * listed just before the publish can still open what it listed.
+    * `create` = false requires `dir` to exist (a seeded branch lineage).
+    * Returns the published version. */
+  private[graft] def publishNext(fs: FileSystem, dir: Path, prefix: String,
+                                 what: String, prune: Boolean = true,
+                                 create: Boolean = true)
+                                (next: Option[String] => String): Long = {
     var attempt = 0
     while (true) {
-      val ms =
-        if (!fs.exists(md)) Seq.empty
-        else fs.listStatus(md).toSeq
-          .flatMap(s => gen(s.getPath).map(_ -> s.getPath)).sortBy(_._1)
-      require(!seeded || ms.nonEmpty, s"no manifest under $what — " +
-        "create the branch before writing to it")
-      val g = ms.lastOption.map(_._1).getOrElse(0L)
-      val cur = ms.lastOption.map(m => parse(spark, m._2)).getOrElse(Seq.empty)
-      val next = rebase(cur)
-      if (publishAt(fs, md, g + 1L, render(next), create = !seeded))
-        return g + 1L
+      val head = readHead(fs, dir, prefix)
+      val v = head.version + 1L
+      if (publishAt(fs, dir, prefix, v, next(head.body), create)) {
+        if (prune)
+          head.versions.dropRight(1).foreach(s => fs.delete(s._2.getPath, false))
+        return v
+      }
       attempt += 1
       require(attempt < 64,
-        s"commit under $what lost $attempt straight CAS races — " +
-          "giving up (a writer storm or a livelock; retry the operation)")
+        s"$what lost $attempt straight CAS races — giving up (a writer " +
+          "storm or a livelock; retry the operation)")
       Thread.sleep(math.min(50L, attempt.toLong)) // tiny contention backoff
     }
     -1L // unreachable
   }
 
+  /** Publish a WRITE-ONCE declaration (`_rowid.json`, `_bloom.json`,
+    * `_manifests/dv.json`) through the same create-if-absent claim: the
+    * body is written whole to a tmp file beside `path`, then claimed —
+    * two first writers get exactly one winner, and a reader never sees
+    * a partial file. Returns the body that holds: `body` when this
+    * writer won, the winner's otherwise (callers refuse a mismatch).
+    * A writer that crashes between the tmp's create and the claim leaves
+    * `.<name>-xxxxxxxx.tmp` behind; [[gc]] reclaims it once aged, as it
+    * does a crashed manifest publish's tmp. */
+  private[graft] def declareOnce(fs: FileSystem, path: Path,
+                                 body: String): String = {
+    val tmp = new Path(path.getParent,
+      s".${path.getName}-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+    if (atomicClaim(fs, tmp, path)) body else readBody(fs, path)
+  }
+
   /** [[commitEpochDir]]'s rebase — fold-replacement guard, straddle
-    * guard, epoch replacement — shared verbatim by both lineages. */
+    * guard, epoch replacement — the same on main and on a branch. */
   private def appendRebase(where: String, epoch: Long, dir: String)
                           (cur: Seq[Entry]): Seq[Entry] = {
     // fold guard re-checked against the head EVERY rebase attempt — a
@@ -286,10 +372,23 @@ object EpochManifest {
     * re-rebases against the new head — commuting operations converge
     * (each lands exactly once, in some order); a `rebase` that cannot
     * commute with what landed throws (nothing published, loud refusal).
-    * Returns the published generation. */
-  def commitWith(spark: SparkSession, root: String)
-                (rebase: Seq[Entry] => Seq[Entry]): Long =
-    commitAtDir(spark, manifestDir(root), root, seeded = false)(rebase)
+    * `branch` scopes the commit to that branch's lineage — the same
+    * loop, invisible to main readers; the branch must exist (its base
+    * generation is its first). Returns the published generation. */
+  def commitWith(spark: SparkSession, root: String,
+                 branch: Option[String] = None)
+                (rebase: Seq[Entry] => Seq[Entry]): Long = {
+    val (md, what) = branch match {
+      case None => (manifestDir(root), root)
+      case Some(b) => (branchPath(root, b), s"branch '$b' of $root")
+    }
+    publishNext(fsOf(spark, root), md, "m", s"commit under $what",
+      prune = false, create = branch.isEmpty) { body =>
+      require(branch.isEmpty || body.nonEmpty, s"no manifest under $what — " +
+        "create the branch before writing to it")
+      render(rebase(body.map(parse).getOrElse(Seq.empty)))
+    }
+  }
 
   /** Rebase for FOLD-style commits (compaction, row-level rewrites,
     * delete purges): the `replaced` entries' rows were copied into
@@ -341,94 +440,32 @@ object EpochManifest {
   }
 
   // ------------------------------------------------------------- tags
-  // Named snapshot tags: `_manifests/tags.json` maps name → generation.
-  // A tag is a RETENTION ANCHOR — [[gc]] keeps every tagged manifest and
-  // the dirs it references alive alongside the two newest, so 'v1' stays
-  // readable through any number of later commits and compactions until
-  // untagged. Names are [A-Za-z0-9._-]+ (no escaping needed in the
-  // fixed-shape JSON); writes are tmp-then-rename like every manifest
-  // artifact, under the store's single-writer contract.
+  // Named snapshot tags: `_manifests/tags.v<N>.json` maps name →
+  // generation. A tag is a RETENTION ANCHOR — [[gc]] keeps every tagged
+  // manifest and the dirs it references alive alongside the two newest,
+  // so 'v1' stays readable through any number of later commits and
+  // compactions until untagged. Names are [A-Za-z0-9._-]+ (no escaping
+  // needed in the fixed-shape JSON). A versioned log ([[publishNext]]):
+  // two concurrent single-tag operations both land, each exactly once,
+  // and a reader (or gc resolving its retention anchors) never sees an
+  // empty in-between state.
 
-  // tags are VERSIONED like the manifests themselves (tags.v<N>.json,
-  // highest complete file wins; older versions deleted after the new
-  // one lands) — there is never a moment with NO tag file visible, so
-  // a concurrent reader (or gc resolving its retention anchors) cannot
-  // observe an empty in-between state
-  private def tagFiles(spark: SparkSession, root: String): Seq[(Long, Path)] = {
-    val fs = fsOf(spark, root)
-    val md = manifestDir(root)
-    if (!fs.exists(md)) Seq.empty
-    else fs.listStatus(md).toSeq.flatMap { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("tags.v") && n.endsWith(".json"))
-        n.stripPrefix("tags.v").stripSuffix(".json").toLongOption
-          .map(_ -> s.getPath)
-      else None
-    }.sortBy(_._1)
-  }
+  private def parseTags(body: Option[String]): Map[String, Long] =
+    body.toSeq.flatMap(_.linesIterator.filter(_.nonEmpty)).map { line =>
+      // fixed shape {"name":"...","generation":N} per line
+      val n = line.split("\"name\":\"")(1).takeWhile(_ != '"')
+      val g = line.split("\"generation\":")(1).takeWhile(_.isDigit).toLong
+      n -> g
+    }.toMap
 
-  /** The store's named tags, name → pinned generation. Retries once
-    * when the listed version vanished between the listing and the open
-    * (a concurrent tag write published a newer version and reclaimed
-    * this one) — the re-list sees the newer, still-consistent file. */
-  def tags(spark: SparkSession, root: String): Map[String, Long] = {
-    val fs = fsOf(spark, root)
-    def readAt(p: Path): Map[String, Long] = {
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      body.linesIterator.filter(_.nonEmpty).map { line =>
-        // fixed shape {"name":"...","generation":N} per line
-        val n = line.split("\"name\":\"")(1).takeWhile(_ != '"')
-        val g = line.split("\"generation\":")(1).takeWhile(_.isDigit).toLong
-        n -> g
-      }.toMap
-    }
-    def attempt(retriesLeft: Int): Map[String, Long] =
-      tagFiles(spark, root).lastOption match {
-        case None => Map.empty
-        case Some((_, p)) =>
-          try readAt(p) catch {
-            case _: java.io.FileNotFoundException if retriesLeft > 0 =>
-              attempt(retriesLeft - 1)
-          }
-      }
-    attempt(2)
-  }
+  private def renderTags(ts: Map[String, Long]): String =
+    ts.toSeq.sortBy(_._1)
+      .map { case (n, g) => s"""{"name":"$n","generation":$g}""" }
+      .mkString("", "\n", if (ts.isEmpty) "" else "\n")
 
-  /** OCC tag mutation: re-read the current tag map, apply `transform`,
-    * CAS-publish the next tags version (same create-if-absent primitive
-    * as manifest generations) — two concurrent single-tag operations
-    * both land, each exactly once, in some order. */
-  private def writeTagsWith(spark: SparkSession, root: String)
-                           (transform: Map[String, Long] => Map[String, Long])
-      : Map[String, Long] = {
-    val fs = fsOf(spark, root)
-    var attempt = 0
-    while (true) {
-      val old = tagFiles(spark, root)
-      val next = old.lastOption.map(_._1).getOrElse(0L) + 1L
-      val ts = transform(tags(spark, root))
-      val body = ts.toSeq.sortBy(_._1)
-        .map { case (n, g) => s"""{"name":"$n","generation":$g}""" }
-        .mkString("", "\n", if (ts.isEmpty) "" else "\n")
-      val tmp = new Path(manifestDir(root),
-        s".tags.v$next-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      fs.mkdirs(manifestDir(root))
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      if (atomicClaim(fs, tmp, new Path(manifestDir(root), s"tags.v$next.json"))) {
-        // keep the PREVIOUS version alive one write longer: a concurrent
-        // reader that listed it just before this publish can still open
-        // it (reads also retry a vanished file — [[tags]])
-        old.dropRight(1).foreach { case (_, p) => fs.delete(p, false) }
-        return ts
-      }
-      attempt += 1
-      require(attempt < 64, s"tag write under $root lost $attempt CAS races")
-    }
-    Map.empty // unreachable
-  }
+  /** The store's named tags, name → pinned generation. */
+  def tags(spark: SparkSession, root: String): Map[String, Long] =
+    parseTags(readHead(fsOf(spark, root), manifestDir(root), "tags.v").body)
 
   /** Pin `name` to a RETAINED `generation` (default: the current one).
     * Re-tagging an existing name moves it. */
@@ -446,30 +483,31 @@ object EpochManifest {
     require(ms.exists(_._1 == g),
       s"generation $g not retained under $root — available: " +
         ms.map(_._1).mkString("[", ", ", "]"))
-    writeTagsWith(spark, root)(_ + (name -> g))
+    publishNext(fsOf(spark, root), manifestDir(root), "tags.v",
+      s"tag write under $root")(b => renderTags(parseTags(b) + (name -> g)))
     g
   }
 
   /** Drop `name`; its generation becomes reclaimable by the next gc
     * (unless it is among the two newest or otherwise tagged). */
   def untag(spark: SparkSession, root: String, name: String): Unit = {
-    writeTagsWith(spark, root) { ts =>
+    publishNext(fsOf(spark, root), manifestDir(root), "tags.v",
+      s"tag write under $root") { b =>
+      val ts = parseTags(b)
       require(ts.contains(name),
         s"no tag '$name' under $root — tags: ${ts.keys.toSeq.sorted}")
-      ts - name
+      renderTags(ts - name)
     }
     ()
   }
 
   // Column-evolution ops: `_manifests/columns.v<N>.json` — an ordered,
   // append-only log of RENAME / DROP operations applied ON TOP of the
-  // per-entry schema records (which stay immutable with their data).
-  // Same versioned-CAS discipline as tags: highest complete file wins,
-  // publish is create-if-absent, the previous version outlives the
-  // publish by one write so concurrent readers never see a gap. The
-  // log is the table-level schema authority Iceberg keeps in its
-  // metadata JSON — entries keep their as-written (physical) names,
-  // the ops map them to the current (logical) names at read planning.
+  // per-entry schema records (which stay immutable with their data). A
+  // versioned log like the tags. The log is the table-level schema
+  // authority Iceberg keeps in its metadata JSON — entries keep their
+  // as-written (physical) names, the ops map them to the current
+  // (logical) names at read planning.
 
   /** One column-evolution operation, in application order. */
   sealed trait ColumnOp
@@ -478,60 +516,26 @@ object EpochManifest {
     final case class Drop(name: String) extends ColumnOp
   }
 
-  private def columnFiles(spark: SparkSession, root: String)
-      : Seq[(Long, Path)] = {
-    val fs = fsOf(spark, root)
-    val md = manifestDir(root)
-    if (!fs.exists(md)) Seq.empty
-    else fs.listStatus(md).toSeq.flatMap { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("columns.v") && n.endsWith(".json"))
-        n.stripPrefix("columns.v").stripSuffix(".json").toLongOption
-          .map(_ -> s.getPath)
-      else None
-    }.sortBy(_._1)
-  }
+  private def parseColumnOps(body: Option[String]): Seq[ColumnOp] =
+    body.toSeq.flatMap(_.linesIterator.filter(_.nonEmpty)).map { line =>
+      // fixed shape per line, names validated at append
+      if (line.contains("\"op\":\"rename\""))
+        ColumnOp.Rename(
+          line.split("\"from\":\"")(1).takeWhile(_ != '"'),
+          line.split("\"to\":\"")(1).takeWhile(_ != '"'))
+      else
+        ColumnOp.Drop(line.split("\"name\":\"")(1).takeWhile(_ != '"'))
+    }
 
   /** The store's column-evolution ops, oldest first. Empty for stores
     * that never renamed/dropped a column (the overwhelmingly common
-    * case — one existence probe, no read). */
-  def columnOps(spark: SparkSession, root: String): Seq[ColumnOp] = {
-    val fs = fsOf(spark, root)
-    def readAt(p: Path): Seq[ColumnOp] = {
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      body.linesIterator.filter(_.nonEmpty).map { line =>
-        // fixed shape per line, names validated at append
-        if (line.contains("\"op\":\"rename\""))
-          ColumnOp.Rename(
-            line.split("\"from\":\"")(1).takeWhile(_ != '"'),
-            line.split("\"to\":\"")(1).takeWhile(_ != '"'))
-        else
-          ColumnOp.Drop(line.split("\"name\":\"")(1).takeWhile(_ != '"'))
-      }.toSeq
-    }
-    def attempt(retriesLeft: Int): Seq[ColumnOp] =
-      columnFiles(spark, root).lastOption match {
-        case None => Seq.empty
-        case Some((_, p)) =>
-          try readAt(p) catch {
-            case _: java.io.FileNotFoundException if retriesLeft > 0 =>
-              attempt(retriesLeft - 1)
-          }
-      }
-    attempt(2)
-  }
+    * case — one listing, no read). */
+  def columnOps(spark: SparkSession, root: String): Seq[ColumnOp] =
+    parseColumnOps(readHead(fsOf(spark, root), manifestDir(root), "columns.v").body)
 
-  private def renderColumnOp(op: ColumnOp): String = op match {
-    case ColumnOp.Rename(f, t) => s"""{"op":"rename","from":"$f","to":"$t"}"""
-    case ColumnOp.Drop(n) => s"""{"op":"drop","name":"$n"}"""
-  }
-
-  /** OCC append to the column-ops log: re-read, validate against the
-    * CURRENT log via `validate` (runs inside the CAS loop, so two
-    * racing ALTERs both land, each validated against what it actually
-    * follows), publish the next version. */
+  /** OCC append to the column-ops log: `validate` sees the CURRENT log
+    * inside the CAS loop, so two racing ALTERs both land, each validated
+    * against what it actually follows. */
   def appendColumnOps(spark: SparkSession, root: String,
                       ops: Seq[ColumnOp],
                       validate: Seq[ColumnOp] => Unit = _ => ()): Unit = {
@@ -539,29 +543,16 @@ object EpochManifest {
       case ColumnOp.Rename(f, t) => Seq(f, t).foreach(requireRecordable)
       case ColumnOp.Drop(n) => requireRecordable(n)
     }
-    val fs = fsOf(spark, root)
-    var attempt = 0
-    while (attempt < 64) {
-      val old = columnFiles(spark, root)
-      val next = old.lastOption.map(_._1).getOrElse(0L) + 1L
-      val cur = columnOps(spark, root)
+    publishNext(fsOf(spark, root), manifestDir(root), "columns.v",
+      s"column-op append under $root") { b =>
+      val cur = parseColumnOps(b)
       validate(cur)
-      val body = (cur ++ ops).map(renderColumnOp)
-        .mkString("", "\n", "\n")
-      val tmp = new Path(manifestDir(root),
-        s".columns.v$next-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      fs.mkdirs(manifestDir(root))
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      if (atomicClaim(fs, tmp,
-        new Path(manifestDir(root), s"columns.v$next.json"))) {
-        old.dropRight(1).foreach { case (_, p) => fs.delete(p, false) }
-        return
-      }
-      attempt += 1
+      (cur ++ ops).map {
+        case ColumnOp.Rename(f, t) => s"""{"op":"rename","from":"$f","to":"$t"}"""
+        case ColumnOp.Drop(n) => s"""{"op":"drop","name":"$n"}"""
+      }.mkString("", "\n", "\n")
     }
-    throw new IllegalStateException(
-      s"column-op append under $root lost $attempt CAS races")
+    ()
   }
 
   private def requireRecordable(name: String): Unit =
@@ -575,7 +566,7 @@ object EpochManifest {
   // immutable with its data, exactly like column renames). New writes
   // land under the current layout; scans evaluate every pinned entry
   // under its OWN recorded spec — Iceberg's mixed-spec snapshots, no
-  // data rewrite. Same versioned-CAS discipline as the columns log.
+  // data rewrite. A versioned log like the columns log.
 
   /** One recorded table-level layout: identity partition columns in
     * nesting order, optional hash-bucket spec (col, n), optional
@@ -588,106 +579,57 @@ object EpochManifest {
                               bucketCount: Int,
                               transform: Option[String] = None)
 
-  private def layoutFiles(spark: SparkSession, root: String)
-      : Seq[(Long, Path)] = {
-    val fs = fsOf(spark, root)
-    val md = manifestDir(root)
-    if (!fs.exists(md)) Seq.empty
-    else fs.listStatus(md).toSeq.flatMap { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("layout.v") && n.endsWith(".json"))
-        n.stripPrefix("layout.v").stripSuffix(".json").toLongOption
-          .map(_ -> s.getPath)
-      else None
-    }.sortBy(_._1)
+  private def parseLayout(body: String): LayoutSpec = {
+    def field(k: String): Option[String] =
+      if (!body.contains("\"" + k + "\":\"")) None
+      else Some(body.split("\"" + k + "\":\"")(1).takeWhile(_ != '"'))
+    val pc = field("partCols").toSeq
+      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+    val bc = field("bucketCol").filter(_.nonEmpty)
+    val bn =
+      if (!body.contains("\"bucketCount\":")) 0
+      else body.split("\"bucketCount\":")(1).takeWhile(_.isDigit).toInt
+    LayoutSpec(pc, bc, bn, field("transform").filter(_.nonEmpty))
   }
 
   /** The CURRENT declared layout, when the store ever evolved its
     * partition spec; None for the overwhelmingly common never-evolved
-    * store (one directory probe, no read). */
-  def currentLayout(spark: SparkSession, root: String): Option[LayoutSpec] = {
-    val fs = fsOf(spark, root)
-    def readAt(p: Path): LayoutSpec = {
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      def field(k: String): Option[String] =
-        if (!body.contains("\"" + k + "\":\"")) None
-        else Some(body.split("\"" + k + "\":\"")(1).takeWhile(_ != '"'))
-      val pc = field("partCols").toSeq
-        .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-      val bc = field("bucketCol").filter(_.nonEmpty)
-      val bn =
-        if (!body.contains("\"bucketCount\":")) 0
-        else body.split("\"bucketCount\":")(1).takeWhile(_.isDigit).toInt
-      LayoutSpec(pc, bc, bn, field("transform").filter(_.nonEmpty))
-    }
-    def attempt(retriesLeft: Int): Option[LayoutSpec] =
-      layoutFiles(spark, root).lastOption match {
-        case None => None
-        case Some((_, p)) =>
-          try Some(readAt(p)) catch {
-            case _: java.io.FileNotFoundException if retriesLeft > 0 =>
-              attempt(retriesLeft - 1)
-            case e: java.io.FileNotFoundException =>
-              // retry exhaustion means the re-list itself kept racing
-              // publishLayout deletes — returning None here would
-              // silently read an EVOLVED store as never-evolved
-              // (foreign entries walked under options-derived layout →
-              // wrong results). Loud beats wrong.
-              throw new IllegalStateException(
-                s"layout log under $root: every retained layout file " +
-                  "vanished between list and read across retries — " +
-                  "racing evolve_layout publishes; retry the operation",
-                e)
-          }
-      }
-    attempt(3)
-  }
+    * store (one listing, no read). A head that kept vanishing fails
+    * loudly ([[readHead]]) — reading an EVOLVED store as never-evolved
+    * would walk foreign entries under the options-derived layout. */
+  def currentLayout(spark: SparkSession, root: String): Option[LayoutSpec] =
+    readHead(fsOf(spark, root), manifestDir(root), "layout.v").body.map(parseLayout)
 
   /** OCC publish of a new table-level layout (`CALL evolve_layout`):
-    * re-read, validate the CURRENT layout via `validate` inside the CAS
-    * loop, publish the next version. Metadata-only — no entry is
-    * touched; old entries keep serving under their recorded specs. */
+    * `validate` sees the CURRENT layout inside the CAS loop.
+    * Metadata-only — no entry is touched; old entries keep serving
+    * under their recorded specs. */
   def publishLayout(spark: SparkSession, root: String, spec: LayoutSpec,
                     validate: Option[LayoutSpec] => Unit = _ => ()): Unit = {
     spec.partCols.foreach(requireRecordable)
     spec.bucketCol.foreach(requireRecordable)
     require(spec.bucketCol.isEmpty == (spec.bucketCount <= 0),
       "bucketCol and a positive bucketCount go together")
-    val fs = fsOf(spark, root)
-    var attempt = 0
-    while (attempt < 64) {
-      val old = layoutFiles(spark, root)
-      val next = old.lastOption.map(_._1).getOrElse(0L) + 1L
-      validate(currentLayout(spark, root))
-      spec.transform.foreach(t => require(!t.contains("\""),
-        s"transform spelling '$t' cannot be recorded"))
-      val body = s"""{"partCols":"${spec.partCols.mkString(",")}"""" +
-        spec.bucketCol.map(c =>
-          s""","bucketCol":"$c","bucketCount":${spec.bucketCount}""")
-          .getOrElse("") +
-        spec.transform.map(t => s""","transform":"$t"""").getOrElse("") +
-        "}\n"
-      val tmp = new Path(manifestDir(root),
-        s".layout.v$next-${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      fs.mkdirs(manifestDir(root))
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      if (atomicClaim(fs, tmp,
-        new Path(manifestDir(root), s"layout.v$next.json"))) {
-        old.dropRight(1).foreach { case (_, p) => fs.delete(p, false) }
-        return
-      }
-      attempt += 1
+    spec.transform.foreach(t => require(!t.contains("\""),
+      s"transform spelling '$t' cannot be recorded"))
+    val body = s"""{"partCols":"${spec.partCols.mkString(",")}"""" +
+      spec.bucketCol.map(c =>
+        s""","bucketCol":"$c","bucketCount":${spec.bucketCount}""")
+        .getOrElse("") +
+      spec.transform.map(t => s""","transform":"$t"""").getOrElse("") +
+      "}\n"
+    publishNext(fsOf(spark, root), manifestDir(root), "layout.v",
+      s"layout publish under $root") { b =>
+      validate(b.map(parseLayout))
+      body
     }
-    throw new IllegalStateException(
-      s"layout publish under $root lost $attempt CAS races")
+    ()
   }
 
   /** The current snapshot: entries of the highest complete manifest. */
   def entries(spark: SparkSession, root: String): Seq[Entry] =
-    manifests(spark, root).lastOption.map(m => parse(spark, m._2)).getOrElse(Seq.empty)
+    readHead(fsOf(spark, root), manifestDir(root), "m").body.map(parse)
+      .getOrElse(Seq.empty)
 
   /** The RETAINED manifest generations, ascending — the store's time-
     * travel horizon. [[gc]] keeps the two newest manifests (and every
@@ -700,14 +642,8 @@ object EpochManifest {
   /** The retained generations with their commit instants (manifest file
     * mtime, epoch millis), ascending — the observable timeline
     * `TIMESTAMP AS OF` resolves against. */
-  def snapshots(spark: SparkSession, root: String): Seq[(Long, Long)] = {
-    val fs = fsOf(spark, root)
-    val md = manifestDir(root)
-    if (!fs.exists(md)) Seq.empty
-    else fs.listStatus(md).toSeq
-      .flatMap(s => gen(s.getPath).map(g => (g, s.getModificationTime)))
-      .sortBy(_._1)
-  }
+  def snapshots(spark: SparkSession, root: String): Seq[(Long, Long)] =
+    manifests(spark, root).map { case (g, s) => (g, s.getModificationTime) }
 
   /** `TIMESTAMP AS OF` resolution: the newest RETAINED generation whose
     * manifest landed at or before `tsMillis`. A timestamp before the
@@ -738,7 +674,7 @@ object EpochManifest {
       s"generation $generation not retained under $root — " +
         s"available: ${ms.map(_._1).mkString("[", ", ", "]")} (gc keeps the " +
         "two newest manifests; older snapshots are reclaimed by design)"))
-    parse(spark, m._2)
+    readEntries(fsOf(spark, root), m._2.getPath)
   }
 
   /** Commit a full entry list as the next manifest generation — BLIND
@@ -755,7 +691,7 @@ object EpochManifest {
     * whose `_claims/<name>` marker THIS writer exclusively creates —
     * racing writers land on distinct attempt numbers instead of
     * silently writing into the same dir. */
-  private def claimDir(fs: org.apache.hadoop.fs.FileSystem, root: String,
+  private def claimDir(fs: FileSystem, root: String,
                        prefix: String, epoch: Long): String = {
     var a = 1
     while (true) {
@@ -875,11 +811,32 @@ object EpochManifest {
 
   /** [[append]]'s manifest step for writers that land the attempt dir's
     * files themselves (the DSv2 epochstore sink): re-check the fold
-    * guard, then commit `dir` as `epoch`'s (replacement) entry. */
+    * guard, then commit `dir` as `epoch`'s (replacement) entry — on main,
+    * or on `branch`'s lineage (write-audit-publish). */
   def commitEpochDir(spark: SparkSession, root: String, epoch: Long,
-                     dir: String): Unit = {
-    commitWith(spark, root)(appendRebase(s"under $root", epoch, dir))
+                     dir: String, branch: Option[String] = None): Unit = {
+    val where = branch.fold(s"under $root")(b => s"on branch '$b' of $root")
+    commitWith(spark, root, branch)(appendRebase(where, epoch, dir))
     ()
+  }
+
+  /** AUTO-allocated epoch append: the epoch is chosen INSIDE the CAS
+    * rebase as max(head)+1 — preferring `atLeast` — so two racing
+    * auto-epoch writers land on DISTINCT fresh epochs (both visible)
+    * instead of one silently replacing the other via the explicit-epoch
+    * retry-replacement semantics. `branch` as in [[commitEpochDir]].
+    * Returns the allocated epoch. */
+  def commitFreshEpochDir(spark: SparkSession, root: String, dir: String,
+                          atLeast: Long = 0L,
+                          branch: Option[String] = None): Long = {
+    var allocated = -1L
+    commitWith(spark, root, branch) { cur =>
+      val e = math.max(atLeast,
+        cur.map(_.epoch).maxOption.map(_ + 1L).getOrElse(0L))
+      allocated = e
+      cur :+ Entry(e, dir)
+    }
+    allocated
   }
 
   // ------------------------------------------------------- branches
@@ -914,34 +871,45 @@ object EpochManifest {
       .map(_.getPath.getName.stripPrefix("branch-")).sorted
   }
 
-  private def branchManifests(spark: SparkSession, root: String,
-                              name: String): Seq[(Long, Path)] = {
-    val fs = fsOf(spark, root)
-    val bd = branchPath(root, name)
-    if (!fs.exists(bd)) Seq.empty
-    else fs.listStatus(bd).toSeq
-      .flatMap(s => gen(s.getPath).map(_ -> s.getPath)).sortBy(_._1)
-  }
-
   /** Every dir referenced by a live branch lineage OR an in-flight
     * publish fence (`.publishing-*` — [[publishBranch]]'s retired
     * lineage): the branch-side retention anchors [[gc]] and
     * [[expireSnapshots]] share. A crashed publish leaves its fence dir
     * behind; anchoring it means the data is still there when an
-    * operator renames the fence back to `branch-<name>` to recover. */
+    * operator renames the fence back to `branch-<name>` to recover.
+    *
+    * A lineage that vanishes between the listing of `_manifests` and
+    * its own listing (or read) was moved by a publish — retired to its
+    * fence, restored, or published and deleted — or dropped, so
+    * `_manifests` is listed again; when the retries run out the caller fails loudly
+    * rather than anchoring nothing. Callers read these anchors BEFORE
+    * listing main's manifests: a publish commits main before it deletes
+    * its fence, so a lineage gone from every listing here is in main's
+    * later listing. */
   private def branchAnchoredDirs(spark: SparkSession,
                                  root: String): Set[String] = {
     val fs = fsOf(spark, root)
     val md = manifestDir(root)
-    if (!fs.exists(md)) return Set.empty
-    fs.listStatus(md).toSeq
-      .filter(s => s.isDirectory &&
-        (s.getPath.getName.startsWith("branch-") ||
-          s.getPath.getName.startsWith(".publishing-")))
-      .flatMap(b => fs.listStatus(b.getPath).toSeq
-        .flatMap(s => gen(s.getPath).map(_ -> s.getPath)).sortBy(_._1)
-        .flatMap(m => parse(spark, m._2)))
-      .map(_.dir).toSet
+    def attempt(retriesLeft: Int): Set[String] = {
+      val lineages =
+        if (!fs.exists(md)) Seq.empty[FileStatus]
+        else fs.listStatus(md).toSeq.filter(s => s.isDirectory &&
+          (s.getPath.getName.startsWith("branch-") ||
+            s.getPath.getName.startsWith(".publishing-")))
+      try lineages
+        .flatMap(b => versions(fs, b.getPath, "m", mustExist = true)
+          .flatMap(m => readEntries(fs, m._2.getPath)))
+        .map(_.dir).toSet
+      catch {
+        case _: java.io.FileNotFoundException if retriesLeft > 0 =>
+          attempt(retriesLeft - 1)
+        case e: java.io.FileNotFoundException =>
+          throw new IllegalStateException(
+            s"branch lineages under $md kept moving across retries while " +
+              "their retained dirs were read — racing publishes; retry", e)
+      }
+    }
+    attempt(3)
   }
 
   /** Create `name` at main's current head (the branch's BASE): the head
@@ -950,77 +918,23 @@ object EpochManifest {
     * IS the recorded base. Exclusive — a second create refuses. */
   def createBranch(spark: SparkSession, root: String, name: String): Long = {
     val fs = fsOf(spark, root)
-    val ms = manifests(spark, root)
-    require(ms.nonEmpty, s"no committed manifest under $root")
-    val (baseGen, basePath) = ms.last
+    val head = readHead(fs, manifestDir(root), "m")
+    require(head.body.nonEmpty, s"no committed manifest under $root")
     val bd = branchPath(root, name)
     require(!fs.exists(bd),
       s"branch '$name' already exists under $root — drop or publish it first")
-    val body = {
-      val in = fs.open(basePath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    require(publishAt(fs, bd, baseGen, body),
+    require(publishAt(fs, bd, "m", head.version, head.body.get),
       s"branch '$name' appeared concurrently under $root")
-    baseGen
+    head.version
   }
 
   /** (base generation, head generation, head entries) of a live branch. */
   def branchState(spark: SparkSession, root: String, name: String)
       : (Long, Long, Seq[Entry]) = {
-    val bms = branchManifests(spark, root, name)
-    require(bms.nonEmpty,
+    val head = readHead(fsOf(spark, root), branchPath(root, name), "m")
+    require(head.body.nonEmpty,
       s"no branch '$name' under $root — branches: ${branches(spark, root)}")
-    (bms.head._1, bms.last._1, parse(spark, bms.last._2))
-  }
-
-  /** [[commitWith]], scoped to a branch lineage — the SAME CAS/retry
-    * loop ([[commitAtDir]]), same rebase convergence, invisible to main
-    * readers. */
-  def commitBranchWith(spark: SparkSession, root: String, name: String)
-                      (rebase: Seq[Entry] => Seq[Entry]): Long =
-    commitAtDir(spark, branchPath(root, name),
-      s"branch '$name' of $root", seeded = true)(rebase)
-
-  /** AUTO-allocated epoch append: the epoch is chosen INSIDE the CAS
-    * rebase as max(head)+1 — preferring `atLeast` — so two racing
-    * auto-epoch writers land on DISTINCT fresh epochs (both visible)
-    * instead of one silently replacing the other via the explicit-epoch
-    * retry-replacement semantics. Returns the allocated epoch. */
-  def commitFreshEpochDir(spark: SparkSession, root: String, dir: String,
-                          atLeast: Long = 0L): Long = {
-    var allocated = -1L
-    commitWith(spark, root) { cur =>
-      val e = math.max(atLeast,
-        cur.map(_.epoch).maxOption.map(_ + 1L).getOrElse(0L))
-      allocated = e
-      cur :+ Entry(e, dir)
-    }
-    allocated
-  }
-
-  /** [[commitFreshEpochDir]], scoped to a branch lineage. */
-  def commitBranchFreshEpochDir(spark: SparkSession, root: String,
-                                name: String, dir: String,
-                                atLeast: Long = 0L): Long = {
-    var allocated = -1L
-    commitBranchWith(spark, root, name) { cur =>
-      val e = math.max(atLeast,
-        cur.map(_.epoch).maxOption.map(_ + 1L).getOrElse(0L))
-      allocated = e
-      cur :+ Entry(e, dir)
-    }
-    allocated
-  }
-
-  /** Epoch-append into a branch — [[commitEpochDir]]'s EXACT rebase
-    * (fold + straddle guards shared, not copied), scoped. */
-  def commitBranchEpochDir(spark: SparkSession, root: String, name: String,
-                           epoch: Long, dir: String): Unit = {
-    commitBranchWith(spark, root, name)(
-      appendRebase(s"on branch '$name' of $root", epoch, dir))
-    ()
+    (head.versions.head._1, head.version, parse(head.body.get))
   }
 
   /** Entries of a branch head — the audit read. */
@@ -1037,8 +951,8 @@ object EpochManifest {
     *
     * Concurrent branch WRITERS are fenced by RETIRING the lineage
     * first: the branch dir is atomically renamed to a hidden
-    * `.publishing-` name BEFORE the head is read, so a
-    * commitBranchWith / commitBranchFreshEpochDir racing the publish
+    * `.publishing-` name BEFORE the head is read, so a branch
+    * [[commitWith]] racing the publish
     * either lands before the rename (its epoch is in the published
     * head) or fails loudly ("no manifest under branch" — its CAS
     * target dir is gone). Without the fence, a branch commit landing
@@ -1055,11 +969,10 @@ object EpochManifest {
     require(fs.rename(bd, retired),
       s"branch '$name' of $root: retire rename failed — a concurrent " +
         "publish or drop took the branch; re-check branchState")
-    val bms = fs.listStatus(retired).toSeq
-      .flatMap(s => gen(s.getPath).map(_ -> s.getPath)).sortBy(_._1)
-    require(bms.nonEmpty, s"branch '$name' of $root has no manifest")
-    val baseGen = bms.head._1
-    val headEntries = parse(spark, bms.last._2)
+    val head = readHead(fs, retired, "m")
+    require(head.body.nonEmpty, s"branch '$name' of $root has no manifest")
+    val baseGen = head.versions.head._1
+    val headEntries = parse(head.body.get)
     try {
       val g = commitWith(spark, root) { _ =>
         val liveGen = manifests(spark, root).last._1
@@ -1123,20 +1036,21 @@ object EpochManifest {
       s"expireSnapshots keepLast = $keepLast — the floor is 2 (the " +
         "two-manifest isolation window every reader is promised)")
     val fs = fsOf(spark, root)
+    val branchDirs = branchAnchoredDirs(spark, root) // before main's listing
     val ms = manifests(spark, root)
     val tagged = tags(spark, root).values.toSet
     val keepNewest = ms.takeRight(keepLast).map(_._1).toSet
     val expired = ms
       .filterNot(m => keepNewest(m._1) || tagged(m._1))
-      .filter(m => fs.getFileStatus(m._2).getModificationTime < olderThanMs)
+      .filter(_._2.getModificationTime < olderThanMs)
     if (expired.isEmpty) return Seq.empty
     val expiredGens = expired.map(_._1).toSet
     val keepDirs = ms.filterNot(m => expiredGens(m._1))
-      .flatMap(m => parse(spark, m._2)).map(_.dir).toSet ++
-      branchAnchoredDirs(spark, root)
-    val orphaned = expired.flatMap(m => parse(spark, m._2)).map(_.dir)
+      .flatMap(m => readEntries(fs, m._2.getPath)).map(_.dir).toSet ++
+      branchDirs
+    val orphaned = expired.flatMap(m => readEntries(fs, m._2.getPath)).map(_.dir)
       .distinct.filterNot(keepDirs)
-    expired.foreach(m => fs.delete(m._2, false))
+    expired.foreach(m => fs.delete(m._2.getPath, false))
     orphaned.foreach(d => fs.delete(new Path(s"$root/$d"), true))
     expired.map(_._1)
   }
@@ -1186,10 +1100,11 @@ object EpochManifest {
         "under its imminent commit; pass force => true only when no " +
         "writer can be live")
     val fs = fsOf(spark, root)
+    val branchDirs = branchAnchoredDirs(spark, root) // before main's listing
     val ms = manifests(spark, root)
     if (ms.isEmpty) return Seq.empty
-    val committed = ms.flatMap(m => parse(spark, m._2)).map(_.dir).toSet ++
-      branchAnchoredDirs(spark, root)
+    val committed = ms.flatMap(m => readEntries(fs, m._2.getPath)).map(_.dir).toSet ++
+      branchDirs
     val cutoff = System.currentTimeMillis() - orphanAgeMs
     val orphans = fs.listStatus(new Path(root)).toSeq
       .filter(s => s.isDirectory &&
@@ -1204,6 +1119,11 @@ object EpochManifest {
   private def reclaim(spark: SparkSession, root: String,
                       orphanAgeMs: Long): Seq[String] = {
     val fs = fsOf(spark, root)
+    // live BRANCHES (and in-flight publish fences) are retention
+    // anchors: a write-audit-publish lineage references dirs no main
+    // manifest names yet. Read before main's listing (see
+    // [[branchAnchoredDirs]])
+    val branchDirs = branchAnchoredDirs(spark, root)
     val ms = manifests(spark, root)
     if (ms.isEmpty) return Seq.empty
     // tagged generations are retention anchors: their manifests and the
@@ -1211,16 +1131,13 @@ object EpochManifest {
     val tagged = tags(spark, root).values.toSet
     val keepManifests =
       ms.takeRight(2) ++ ms.dropRight(2).filter(m => tagged(m._1))
-    // live BRANCHES (and in-flight publish fences) are retention
-    // anchors too: a write-audit-publish lineage references dirs no
-    // main manifest names yet
-    val branchDirs = branchAnchoredDirs(spark, root)
-    val keepDirs = keepManifests.flatMap(m => parse(spark, m._2))
+    val keepDirs = keepManifests.flatMap(m => readEntries(fs, m._2.getPath))
       .map(_.dir).toSet ++ branchDirs
     // every dir ANY retained manifest names — the committed-history set
-    val committedDirs = ms.flatMap(m => parse(spark, m._2)).map(_.dir).toSet
+    val committedDirs = ms.flatMap(m => readEntries(fs, m._2.getPath)).map(_.dir).toSet
     val cutoff = System.currentTimeMillis() - orphanAgeMs
-    val deleted = fs.listStatus(new Path(root)).toSeq
+    val top = fs.listStatus(new Path(root)).toSeq
+    val deleted = top
       .filter(s => s.isDirectory &&
         (s.getPath.getName.startsWith("d") || s.getPath.getName.startsWith("f")))
       .filterNot(s => keepDirs.contains(s.getPath.getName))
@@ -1228,11 +1145,14 @@ object EpochManifest {
         s.getModificationTime < cutoff)
     deleted.foreach(s => fs.delete(s.getPath, true))
     val keepGen = keepManifests.map(_._1).toSet
-    ms.filterNot(m => keepGen.contains(m._1)).foreach(m => fs.delete(m._2, false))
-    // a crashed writer's manifest tmp (gen() filters it from listings,
-    // so nothing else ever touches it) — but a LIVE writer's in-flight
-    // tmp is also here, so only aged ones go
-    fs.listStatus(manifestDir(root)).toSeq
+    ms.filterNot(m => keepGen.contains(m._1))
+      .foreach(m => fs.delete(m._2.getPath, false))
+    // a crashed writer's manifest tmp ([[versions]] skips it, so nothing
+    // else ever touches it) or root-level declaration tmp
+    // ([[declareOnce]]'s `._<name>-*.tmp`) — but a LIVE writer's
+    // in-flight tmp is also here, so only aged ones go
+    (fs.listStatus(manifestDir(root)).toSeq ++
+      top.filter(s => !s.isDirectory && s.getPath.getName.startsWith("._")))
       .filter(s => s.getPath.getName.endsWith(".tmp") &&
         s.getModificationTime < cutoff)
       .foreach(s => fs.delete(s.getPath, false))

@@ -46,25 +46,24 @@ object EpochStoreDelta {
 
   /** Store-level row-identity declaration (`_rowid.json` under the
     * root): written once (create-table property `rowid` or
-    * [[declare]]), read by scans and the row-level-operation router.
+    * [[declare]]; [[EpochManifest.declareOnce]] — racing first writers
+    * get one winner), read by scans and the row-level-operation router.
     * The columns must be DATA columns (not partition-dir levels) and
     * must uniquely identify rows — equality tombstones kill EVERY row
     * of a key, so a duplicate key would lose rows on update. */
   def declare(spark: SparkSession, root: String, cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "rowid needs at least one column")
     val fs = new Path(root).getFileSystem(GraftBridge.sessionHadoopConf(spark))
-    declared(spark, root) match {
-      case Some(existing) =>
-        require(existing == cols,
-          s"store $root already declares rowid ${existing.mkString(",")}; " +
-            s"re-declaring ${cols.mkString(",")} would strand its tombstones")
-      case None =>
-        val out = fs.create(new Path(root, "_rowid.json"), true)
-        try out.write(
-          s"""{"columns":"${cols.mkString(",")}"}""".getBytes("UTF-8"))
-        finally out.close()
-    }
+    val existing = declared(spark, root).getOrElse(columnsOf(
+      EpochManifest.declareOnce(fs, new Path(root, "_rowid.json"),
+        s"""{"columns":"${cols.mkString(",")}"}""")))
+    require(existing == cols,
+      s"store $root already declares rowid ${existing.mkString(",")}; " +
+        s"re-declaring ${cols.mkString(",")} would strand its tombstones")
   }
+
+  private def columnsOf(body: String): Seq[String] =
+    body.split("\"columns\":\"")(1).takeWhile(_ != '"').split(',').toSeq
 
   def declared(spark: SparkSession, root: String): Option[Seq[String]] = {
     val fs = new Path(root).getFileSystem(GraftBridge.sessionHadoopConf(spark))
@@ -74,8 +73,7 @@ object EpochStoreDelta {
       val in = fs.open(p)
       val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-      Some(body.split("\"columns\":\"")(1).takeWhile(_ != '"')
-        .split(',').toSeq)
+      Some(columnsOf(body))
     }
   }
 

@@ -102,13 +102,11 @@ private[graft] object EpochStoreDv {
   private[sources] def publishMarker(spark: SparkSession, root: String)
       : Unit = {
     val fs = new Path(root).getFileSystem(GraftBridge.sessionHadoopConf(spark))
-    if (!fs.exists(markerPath(root))) {
-      fs.mkdirs(markerPath(root).getParent)
-      val out = fs.create(markerPath(root), true)
-      try out.write(
-        "{\"positionDeletes\":true,\"manifested\":true}\n".getBytes("UTF-8"))
-      finally out.close()
-    }
+    // claimed whole ([[EpochManifest.declareOnce]]): markerState caches
+    // what it reads for the JVM's life, so it must never see a partial file
+    if (!fs.exists(markerPath(root)))
+      EpochManifest.declareOnce(fs, markerPath(root),
+        "{\"positionDeletes\":true,\"manifested\":true}\n"): Unit
   }
 
   /** `input_file_name()` → the file's path RELATIVE to `$root/$dir`,

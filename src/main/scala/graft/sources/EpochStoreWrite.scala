@@ -320,7 +320,7 @@ final class EpochStoreWriteBuilder(info: LogicalWriteInfo)
 
 /** Write-time CHECK constraints — the store's data-quality gate
   * (Delta's CHECK constraints on the manifest protocol): declared
-  * predicates live in `_manifests/constraints.json`, and EVERY commit
+  * predicates live in `_manifests/constraints.v<N>.json`, and EVERY commit
   * path (batch sink, streaming epoch, overwrite, row-level rewrite)
   * validates its staged epoch against all of them BEFORE the manifest
   * publish — a violating write throws with the constraint name and
@@ -334,22 +334,14 @@ final class EpochStoreWriteBuilder(info: LogicalWriteInfo)
   * gates future writes, it does not retro-scan. */
 object EpochStoreConstraints {
 
-  // versioned like the manifests (constraints.v<N>.json, highest wins,
-  // older versions deleted AFTER the new one lands): a commit path's
-  // enforce() racing an add/drop always sees a complete constraint set,
-  // never an empty in-between window
-  private def files(fs: org.apache.hadoop.fs.FileSystem,
-                    root: String): Seq[(Long, Path)] = {
-    val md = new Path(s"$root/_manifests")
-    if (!fs.exists(md)) Seq.empty
-    else fs.listStatus(md).toSeq.flatMap { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("constraints.v") && n.endsWith(".json"))
-        n.stripPrefix("constraints.v").stripSuffix(".json").toLongOption
-          .map(_ -> s.getPath)
-      else None
-    }.sortBy(_._1)
-  }
+  // `_manifests/constraints.v<N>.json`, one of the store's versioned
+  // metadata logs (EpochManifest.publishNext): racing add/drop calls
+  // each land exactly once, validated against the set they follow, and
+  // a commit path's enforce() racing them reads a complete set — the
+  // previous version outlives each publish, and a vanished head re-lists
+  private def log(spark: SparkSession, root: String) =
+    (new Path(root).getFileSystem(GraftBridge.sessionHadoopConf(spark)),
+      new Path(s"$root/_manifests"))
 
   private def esc(s: String): String = s.flatMap {
     case '"' => "\\\""
@@ -370,24 +362,14 @@ object EpochStoreConstraints {
     sb.toString
   }
 
-  /** Declared constraints, (name, SQL expression), declaration order. */
-  def list(spark: SparkSession, root: String): Seq[(String, String)] = {
-    val fs = new Path(root).getFileSystem(GraftBridge.sessionHadoopConf(spark))
-    files(fs, root).lastOption match {
-      case None => Seq.empty
-      case Some((_, p)) =>
-        val in = fs.open(p)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        body.linesIterator.filter(_.nonEmpty).map { line =>
-          // fixed shape {"name":"...","expr":"..."} with \-escaping
-          val n = line.split("\"name\":\"")(1)
-          val name = unesc(n.substring(0, unescEnd(n)))
-          val e = line.split("\"expr\":\"")(1)
-          (name, unesc(e.substring(0, unescEnd(e))))
-        }.toSeq
+  private def parse(body: Option[String]): Seq[(String, String)] =
+    body.toSeq.flatMap(_.linesIterator.filter(_.nonEmpty)).map { line =>
+      // fixed shape {"name":"...","expr":"..."} with \-escaping
+      val n = line.split("\"name\":\"")(1)
+      val name = unesc(n.substring(0, unescEnd(n)))
+      val e = line.split("\"expr\":\"")(1)
+      (name, unesc(e.substring(0, unescEnd(e))))
     }
-  }
 
   /** Index of the closing unescaped quote. */
   private def unescEnd(s: String): Int = {
@@ -399,22 +381,23 @@ object EpochStoreConstraints {
     i
   }
 
-  private def write(spark: SparkSession, root: String,
-                    cs: Seq[(String, String)]): Unit = {
-    val fs = new Path(root).getFileSystem(GraftBridge.sessionHadoopConf(spark))
-    fs.mkdirs(new Path(s"$root/_manifests"))
-    val old = files(fs, root)
-    val next = old.lastOption.map(_._1).getOrElse(0L) + 1L
-    val body = cs.map { case (n, e) =>
-      s"""{"name":"${esc(n)}","expr":"${esc(e)}"}""" }
-      .mkString("", "\n", if (cs.isEmpty) "" else "\n")
-    val tmp = new Path(s"$root/_manifests/.constraints.v$next.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp,
-      new Path(s"$root/_manifests/constraints.v$next.json")),
-      s"constraint write rename failed under $root")
-    old.foreach { case (_, p) => fs.delete(p, false) }
+  /** Declared constraints, (name, SQL expression), declaration order. */
+  def list(spark: SparkSession, root: String): Seq[(String, String)] = {
+    val (fs, md) = log(spark, root)
+    parse(EpochManifest.readHead(fs, md, "constraints.v").body)
+  }
+
+  /** OCC update: `change` maps the CURRENT declared set to the next. */
+  private def update(spark: SparkSession, root: String)
+                    (change: Seq[(String, String)] => Seq[(String, String)]): Unit = {
+    val (fs, md) = log(spark, root)
+    EpochManifest.publishNext(fs, md, "constraints.v",
+      s"constraint write under $root") { b =>
+      val cs = change(parse(b))
+      cs.map { case (n, e) => s"""{"name":"${esc(n)}","expr":"${esc(e)}"}""" }
+        .mkString("", "\n", if (cs.isEmpty) "" else "\n")
+    }
+    ()
   }
 
   /** Declare `name CHECK (expr)`. The expression is ANALYZED against
@@ -425,26 +408,27 @@ object EpochStoreConstraints {
     require(name.nonEmpty && name.forall(c =>
       c.isLetterOrDigit || c == '.' || c == '_' || c == '-'),
       s"constraint name '$name' — use [A-Za-z0-9._-]+")
-    val existing = list(spark, root)
-    require(!existing.exists(_._1 == name),
-      s"constraint '$name' already declared under $root")
     scala.util.Try(EpochStore.evolvedSchema(spark, root)._1).toOption
       .foreach { s =>
         spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), s)
           .filter(org.apache.spark.sql.functions.expr(expression))
           .queryExecution.analyzed
       }
-    write(spark, root, existing :+ (name, expression))
+    update(spark, root) { existing =>
+      require(!existing.exists(_._1 == name),
+        s"constraint '$name' already declared under $root")
+      existing :+ (name, expression)
+    }
   }
 
   /** Drop a declared constraint; future writes stop checking it. */
-  def drop(spark: SparkSession, root: String, name: String): Unit = {
-    val existing = list(spark, root)
-    require(existing.exists(_._1 == name),
-      s"no constraint '$name' under $root — declared: " +
-        existing.map(_._1).mkString(", "))
-    write(spark, root, existing.filterNot(_._1 == name))
-  }
+  def drop(spark: SparkSession, root: String, name: String): Unit =
+    update(spark, root) { existing =>
+      require(existing.exists(_._1 == name),
+        s"no constraint '$name' under $root — declared: " +
+          existing.map(_._1).mkString(", "))
+      existing.filterNot(_._1 == name)
+    }
 
   /** Validate one staged epoch dir against every declared constraint —
     * ONE fused aggregate pass over the staged files; throws (epoch
@@ -480,23 +464,24 @@ final case class BloomSpec(col: String, expected: Long, fpp: Double)
 
 object BloomSpec {
   /** Store-level declaration of the sidecar column (`_bloom.json` under
-    * the root): written once by the first bloom-indexed commit, read by
-    * scans so SQL/catalog readers get skipping with NO option. A later
-    * write indexing a DIFFERENT column refuses loudly — probing column
-    * c against sidecars built on c' would false-drop files. */
+    * the root): written once by the first bloom-indexed commit
+    * ([[EpochManifest.declareOnce]] — racing first writers get one
+    * winner), read by scans so SQL/catalog readers get skipping with NO
+    * option. A later write indexing a DIFFERENT column refuses loudly —
+    * probing column c against sidecars built on c' would false-drop
+    * files. */
   def publish(spark: SparkSession, root: String, col: String): Unit = {
     val fs = new Path(root).getFileSystem(GraftBridge.sessionHadoopConf(spark))
-    declared(spark, root) match {
-      case Some(existing) =>
-        require(existing == col,
-          s"store $root already declares bloomColumn $existing; writing " +
-            s"sidecars on $col would poison its skip probes")
-      case None =>
-        val out = fs.create(new Path(root, "_bloom.json"), true)
-        try out.write(s"""{"column":"$col"}""".getBytes("UTF-8"))
-        finally out.close()
-    }
+    val existing = declared(spark, root).getOrElse(columnOf(
+      EpochManifest.declareOnce(fs, new Path(root, "_bloom.json"),
+        s"""{"column":"$col"}""")))
+    require(existing == col,
+      s"store $root already declares bloomColumn $existing; writing " +
+        s"sidecars on $col would poison its skip probes")
   }
+
+  private def columnOf(body: String): String =
+    body.split("\"column\":\"")(1).takeWhile(_ != '"')
 
   def declared(spark: SparkSession, root: String): Option[String] = {
     val fs = new Path(root).getFileSystem(GraftBridge.sessionHadoopConf(spark))
@@ -506,7 +491,7 @@ object BloomSpec {
       val in = fs.open(p)
       val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-      Some(body.split("\"column\":\"")(1).takeWhile(_ != '"'))
+      Some(columnOf(body))
     }
   }
 }
@@ -662,20 +647,12 @@ final class EpochStoreBatchWrite(root: String, epoch: Long,
         // AUTO-allocated epoch is chosen INSIDE the commit's CAS rebase
         // instead, so two racing INSERTs land on distinct fresh epochs —
         // both succeed, both visible, nothing silently replaced
-        branch match {
-          case Some(b) =>
-            // write-audit-publish: the epoch lands on the branch lineage,
-            // invisible to main readers until publishBranch fast-forwards
-            if (autoEpoch)
-              EpochManifest.commitBranchFreshEpochDir(spark, root, b, dir,
-                atLeast = epoch): Unit
-            else EpochManifest.commitBranchEpochDir(spark, root, b, epoch, dir)
-          case None =>
-            if (autoEpoch)
-              EpochManifest.commitFreshEpochDir(spark, root, dir,
-                atLeast = epoch): Unit
-            else EpochManifest.commitEpochDir(spark, root, epoch, dir)
-        }
+        // (write-audit-publish: a `branch` epoch lands on the branch
+        // lineage, invisible to main readers until publishBranch)
+        if (autoEpoch)
+          EpochManifest.commitFreshEpochDir(spark, root, dir,
+            atLeast = epoch, branch = branch): Unit
+        else EpochManifest.commitEpochDir(spark, root, epoch, dir, branch)
       case EpochOverwrite.ByFilters(filters) =>
         // a filter overwrite on a store with LIVE merge-on-read
         // tombstones would drop/rewrite delta entries without their

@@ -10,12 +10,14 @@ import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
   * zero directory listing below the entry roots
   * ([[graft.sources.EpochStore.listEntryFiles]]'s index path) — and
   * that a pre-index (sidecar-less) entry really falls back to the
-  * recursive listing. */
+  * recursive listing. Its [[CountingFs.beforeList]] hook lets a spec
+  * inject a concurrent change between two of a caller's listings. */
 final class CountingFs extends RawLocalFileSystem {
   override def getScheme: String = "cfs"
   override def getUri: URI = URI.create("cfs:///")
   override def listStatus(p: Path): Array[FileStatus] = {
     CountingFs.record(p.toUri.getPath)
+    CountingFs.beforeList(p)
     super.listStatus(p)
   }
 }
@@ -24,6 +26,9 @@ object CountingFs {
   private val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   def record(p: String): Unit = { listed.add(p); () }
   def reset(): Unit = listed.clear()
+
+  /** Runs before every listing; a spec that sets it restores the no-op. */
+  @volatile var beforeList: Path => Unit = _ => ()
   def listedPaths: Seq[String] = {
     import scala.jdk.CollectionConverters._
     listed.iterator().asScala.toSeq

@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.EpochManifest
-import graft.core.EpochManifest.Entry
+import graft.core.EpochManifest.{ColumnOp, Entry, LayoutSpec}
+import graft.sources.{BloomSpec, EpochStore, EpochStoreConstraints, EpochStoreDelta}
 
 /** Direct protocol tests for the snapshot store under the persisted
   * IVF-PQ index (VectorSpec holds the end-to-end proofs; these pin the
@@ -204,18 +205,23 @@ class EpochManifestSpec extends SparkSpec {
     writeDir(root, "d0-1", 0 until 5)
     EpochManifest.commit(spark, root, Seq(Entry(0L, "d0-1")))
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val orphanTmp = new Path(s"$root/_manifests/.m99.tmp")
-    fs.create(orphanTmp, true).close() // writer died before its rename
+    // a manifest publish's tmp, and a write-once declaration's
+    // (EpochManifest.declareOnce) at the store root
+    val orphanTmps = Seq(new Path(s"$root/_manifests/.m99.tmp"),
+      new Path(s"$root/._rowid.json-0badc0de.tmp"))
+    // the writer died before its rename / claim
+    orphanTmps.foreach(fs.create(_, true).close())
     assert(EpochManifest.read(spark, root, schema).count() == 5)
     // fresh tmp = possibly a LIVE writer mid-publish: survives
     EpochManifest.gc(spark, root)
-    assert(fs.exists(orphanTmp),
-      "gc deleted a fresh manifest tmp (could be an in-flight publish)")
+    orphanTmps.foreach(t => assert(fs.exists(t),
+      s"gc deleted a fresh tmp $t (could be an in-flight publish)"))
     val old = System.currentTimeMillis() -
       EpochManifest.OrphanReclaimAfterMs - 60000L
-    fs.setTimes(orphanTmp, old, old)
+    orphanTmps.foreach(fs.setTimes(_, old, old))
     EpochManifest.gc(spark, root)
-    assert(!fs.exists(orphanTmp), "crashed writer's tmp manifest survived gc")
+    orphanTmps.foreach(t => assert(!fs.exists(t),
+      s"crashed writer's tmp $t survived gc"))
     assert(EpochManifest.read(spark, root, schema).count() == 5)
   }
 
@@ -400,7 +406,225 @@ class EpochManifestSpec extends SparkSpec {
     EpochManifest.commit(spark, root, EpochManifest.entries(spark, root))
     race(
       () => { EpochManifest.tag(spark, root, "a", 1L); () },
-      () => { EpochManifest.tag(spark, root, "b", 2L); () })
-    assert(EpochManifest.tags(spark, root) == Map("a" -> 1L, "b" -> 2L))
+      () => { EpochManifest.tag(spark, root, "b", 2L); () },
+      () => { EpochManifest.tag(spark, root, "c"); () },
+      () => { EpochManifest.tag(spark, root, "d"); () })
+    assert(EpochManifest.tags(spark, root) ==
+      Map("a" -> 1L, "b" -> 2L, "c" -> 2L, "d" -> 2L))
+  }
+
+  // ---- versioned metadata logs and write-once declarations ----
+
+  private def bytes(p: String): String =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
+      "UTF-8")
+
+  /** A one-epoch store with columns id, c1..c4, region, ts. */
+  private def store(): String = {
+    import spark.implicits._
+    val root = s"${tmp()}/t"
+    EpochStore.write((0 until 8).map(i => (i.toLong, s"a$i", s"b$i", s"c$i",
+      s"d$i", s"R${i % 2}", new java.sql.Timestamp(86400000L * i)))
+      .toDF("id", "c1", "c2", "c3", "c4", "region", "ts"), root, 0L)
+    root
+  }
+
+  private def layouts(n: Int): Seq[LayoutSpec] =
+    (1 to n).map(i => LayoutSpec(Seq("region"), Some("id"), i + 1))
+
+  /** One log's racing writers, started from one barrier on a seeded
+    * store, and the check that each landed exactly once. Racing tag
+    * calls are the dir-claim test's; racing column ops RenameDropSpec's. */
+  private case class Race(name: String, seed: String => Unit,
+                          writers: String => Seq[() => Unit],
+                          check: String => Unit)
+
+  private val races = Seq(
+    Race("tags: 4 racing untag calls",
+      root => (1 to 4).foreach(i => EpochManifest.tag(spark, root, s"t$i")),
+      root => (1 to 4).map(i => () => EpochManifest.untag(spark, root, s"t$i")),
+      root => assert(EpochManifest.tags(spark, root).isEmpty)),
+    Race("layout: 4 racing publishLayout calls",
+      _ => (),
+      root => layouts(4).map(l => () => EpochManifest.publishLayout(spark, root, l)),
+      root => {
+        // each publish landed its own version, and the head is one of them
+        assert(new java.io.File(s"$root/_manifests/layout.v4.json").exists &&
+          !new java.io.File(s"$root/_manifests/layout.v5.json").exists)
+        assert(layouts(4).contains(EpochManifest.currentLayout(spark, root).get))
+      }),
+    Race("constraints: 4 racing add_constraint calls",
+      _ => (),
+      root => (1 to 4).map(i => () =>
+        EpochStoreConstraints.add(spark, root, s"k$i", s"id >= -$i")),
+      root => {
+        val cs = EpochStoreConstraints.list(spark, root)
+        assert(cs.size == 4 &&
+          cs.toSet == (1 to 4).map(i => s"k$i" -> s"id >= -$i").toSet,
+          s"all four racing constraints must land exactly once: $cs")
+      })
+  )
+
+  races.foreach { c =>
+    test(s"racing metadata writers all land exactly once — ${c.name}") {
+      val root = store()
+      c.seed(root)
+      race(c.writers(root): _*)
+      c.check(root)
+    }
+  }
+
+  /** Each log: its i-th rewrite (a writer loops over i) and one read. */
+  private val rewrites: Seq[(String, (String, Int) => Unit, String => Unit)] = Seq(
+    ("tags",
+      (root, i) =>
+        if (i % 2 == 0) EpochManifest.tag(spark, root, "x")
+        else EpochManifest.untag(spark, root, "x"),
+      root => { EpochManifest.tags(spark, root); () }),
+    ("column ops",
+      (root, i) => EpochManifest.appendColumnOps(spark, root,
+        Seq(ColumnOp.Rename(s"k$i", s"k${i + 1}"))),
+      root => { EpochManifest.columnOps(spark, root); () }),
+    ("layout",
+      (root, i) => EpochManifest.publishLayout(spark, root, layouts(2)(i % 2)),
+      root => assert(EpochManifest.currentLayout(spark, root).nonEmpty)),
+    ("constraints",
+      (root, i) =>
+        if (i % 2 == 0) EpochStoreConstraints.add(spark, root, "x", "id >= 0")
+        else EpochStoreConstraints.drop(spark, root, "x"),
+      root => { EpochStoreConstraints.list(spark, root); () })
+  )
+
+  rewrites.foreach { case (log, rewrite, read) =>
+    test(s"a reader racing a rewriting writer never fails — $log") {
+      val root = store()
+      rewrite(root, 0)
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val writerErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+      val writer = new Thread(() => {
+        try while (!stop.get()) rewrite(root, writes.incrementAndGet())
+        catch { case e: Throwable => writerErr.set(e) }
+      })
+      writer.start()
+      try (1 to 200).foreach(_ => read(root))
+      finally { stop.set(true); writer.join() }
+      assert(writerErr.get() == null, s"writer failed: ${writerErr.get()}")
+      assert(writes.get() > 1, "the writer never rewrote the log")
+    }
+  }
+
+  test("metadata log and manifest bytes on disk are pinned") {
+    val root = store()
+    val md = s"$root/_manifests"
+    EpochStore.evolveLayout(spark, root, Seq("region"), Some("id"), 4,
+      Some("days(ts)"))
+    assert(bytes(s"$md/layout.v1.json") ==
+      "{\"partCols\":\"region\",\"bucketCol\":\"id\",\"bucketCount\":4," +
+        "\"transform\":\"days(ts)\"}\n")
+    EpochManifest.commit(spark, root,
+      Seq(Entry(5L, "f5-1", lo = 1L), Entry(6L, "d6-1", dv = Seq("a.dv", "b.dv"))))
+    assert(bytes(s"$md/m2.json") ==
+      "{\"epoch\":5,\"lo\":1,\"dir\":\"f5-1\"}\n" +
+        "{\"epoch\":6,\"dv\":\"a.dv,b.dv\",\"dir\":\"d6-1\"}\n")
+    EpochManifest.tag(spark, root, "v1", 1L)
+    assert(bytes(s"$md/tags.v1.json") == "{\"name\":\"v1\",\"generation\":1}\n")
+    EpochManifest.tag(spark, root, "v2")
+    assert(bytes(s"$md/tags.v2.json") ==
+      "{\"name\":\"v1\",\"generation\":1}\n{\"name\":\"v2\",\"generation\":2}\n")
+    EpochManifest.untag(spark, root, "v1")
+    assert(bytes(s"$md/tags.v3.json") == "{\"name\":\"v2\",\"generation\":2}\n")
+    EpochManifest.untag(spark, root, "v2")
+    assert(bytes(s"$md/tags.v4.json") == "")
+
+    EpochManifest.appendColumnOps(spark, root, Seq(ColumnOp.Rename("c1", "r1")))
+    assert(bytes(s"$md/columns.v1.json") ==
+      "{\"op\":\"rename\",\"from\":\"c1\",\"to\":\"r1\"}\n")
+    EpochManifest.appendColumnOps(spark, root, Seq(ColumnOp.Drop("c2")))
+    assert(bytes(s"$md/columns.v2.json") ==
+      "{\"op\":\"rename\",\"from\":\"c1\",\"to\":\"r1\"}\n" +
+        "{\"op\":\"drop\",\"name\":\"c2\"}\n")
+
+    val e1 = "c3 <> \"x\\y\"\nOR id > 0"
+    EpochStoreConstraints.add(spark, root, "q1", e1)
+    assert(bytes(s"$md/constraints.v1.json") ==
+      "{\"name\":\"q1\",\"expr\":\"c3 <> \\\"x\\\\y\\\"\\nOR id > 0\"}\n")
+    EpochStoreConstraints.add(spark, root, "q2", "id >= 0")
+    assert(bytes(s"$md/constraints.v2.json") ==
+      "{\"name\":\"q1\",\"expr\":\"c3 <> \\\"x\\\\y\\\"\\nOR id > 0\"}\n" +
+        "{\"name\":\"q2\",\"expr\":\"id >= 0\"}\n")
+    EpochStoreConstraints.drop(spark, root, "q1")
+    assert(bytes(s"$md/constraints.v3.json") ==
+      "{\"name\":\"q2\",\"expr\":\"id >= 0\"}\n")
+    EpochStoreConstraints.drop(spark, root, "q2")
+    assert(bytes(s"$md/constraints.v4.json") == "")
+    assert(EpochStoreConstraints.list(spark, root).isEmpty)
+
+    EpochStoreDelta.declare(spark, root, Seq("id", "c3"))
+    assert(bytes(s"$root/_rowid.json") == "{\"columns\":\"id,c3\"}")
+    BloomSpec.publish(spark, root, "c4")
+    assert(bytes(s"$root/_bloom.json") == "{\"column\":\"c4\"}")
+  }
+
+  test("racing first declarations of a write-once marker: exactly one wins") {
+    (1 to 10).foreach { round =>
+      val root = s"${tmp()}/t"
+      Seq(
+        ("rowid", (c: String) => EpochStoreDelta.declare(spark, root, Seq(c)),
+          () => EpochStoreDelta.declared(spark, root).map(_.mkString)),
+        ("bloom", (c: String) => BloomSpec.publish(spark, root, c),
+          () => BloomSpec.declared(spark, root))
+      ).foreach { case (what, declare, declared) =>
+        val won = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val lost = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+        race(Seq("a", "b").map { c =>
+          () =>
+            try { declare(c); won.add(c); () }
+            catch { case e: IllegalArgumentException => lost.add(e); () }
+        }: _*)
+        assert(won.size == 1 && lost.size == 1,
+          s"round $round, $what: winners $won, refusals $lost")
+        assert(lost.peek().getMessage.contains("already declares"),
+          lost.peek().getMessage)
+        assert(declared().contains(won.peek()), s"round $round, $what")
+      }
+    }
+  }
+
+  test("a branch publish racing gc's anchor read: gc keeps the branch's " +
+      "dirs or fails, never deletes what main now names") {
+    CountingFs.install(spark)
+    Seq("retired to its fence", "published").foreach { step =>
+      val local = tmp()
+      val root = s"cfs://$local"
+      val old = System.currentTimeMillis() -
+        EpochManifest.OrphanReclaimAfterMs - 60000L
+      def dir(name: String) = {
+        val f = new java.io.File(s"$local/$name")
+        f.mkdirs(); f.setLastModified(old); f
+      }
+      dir("d0-1")
+      EpochManifest.commit(spark, root, Seq(Entry(0L, "d0-1")))
+      EpochManifest.createBranch(spark, root, "x")
+      val staged = dir("d1-1") // aged: looks like an orphan to main
+      EpochManifest.commitEpochDir(spark, root, 1L, "d1-1", branch = Some("x"))
+      val lineage = new Path(s"$root/_manifests/branch-x").toUri.getPath
+      // the publish lands after gc listed `_manifests`, before it lists
+      // the branch lineage it saw there
+      CountingFs.beforeList = p => if (p.toUri.getPath == lineage) {
+        CountingFs.beforeList = _ => ()
+        val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (step == "published") EpochManifest.publishBranch(spark, root, "x")
+        else fs.rename(new Path(s"$root/_manifests/branch-x"),
+          new Path(s"$root/_manifests/.publishing-x-00000000"))
+      }
+      try EpochManifest.gc(spark, root)
+      catch { case _: IllegalStateException => () } // a loud refusal is fine
+      finally CountingFs.beforeList = _ => ()
+      assert(staged.exists, s"$step: gc deleted the branch's dir d1-1")
+      if (step == "published")
+        assert(EpochManifest.entries(spark, root).map(_.dir).toSet ==
+          Set("d0-1", "d1-1"))
+    }
   }
 }

@@ -2418,7 +2418,7 @@ class EpochStoreSpec extends SparkSpec {
       s"$root/_manifests/.publishing-b-test")
     assert(fs.rename(bd, fence))
     val e = intercept[Exception] {
-      EpochManifest.commitBranchFreshEpochDir(spark, root, "b", "d999-1")
+      EpochManifest.commitFreshEpochDir(spark, root, "d999-1", branch = Some("b"))
     }
     assert(e.getMessage.contains("no manifest"),
       s"a fenced branch commit must refuse loudly: ${e.getMessage}")
